@@ -24,7 +24,7 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from garmadon_spark.operators import corpus, dedup, similarity, text
-from garmadon_spark.session import load_table
+from garmadon_spark.session import MEMO, RESULT, SESSION, load_table, probe
 from garmadon_spark.session import scan_parquet as _scan
 
 
@@ -38,39 +38,15 @@ def _embs(spark, sf_dir):
 
 _PERSIST_MIN_BYTES = int(os.environ.get(
     "SPARK_GRAFT_PERSIST_MIN_BYTES", str(64 * 1024 * 1024)))
-_PERSIST_SIZE_CACHE: dict = {}
 
 
 def _table_size_bytes(sf_dir, table: str = "documents.parquet"):
-    """On-disk size of one fixture table, or ``None`` when the path is
-    not ``os.stat``-able — remote storage (``hdfs://``, ``s3a://``) or
-    a path this process cannot see.  Callers MUST treat ``None`` as
-    "assume production scale": the local stat probe is a cheap local
-    optimization signal, and the safe default at the scale where stat
-    fails is the scale-correct branch (persist ON, fan-out shuffle
-    OFF), never the fixture-tuned one (the r14 verdict's #2: swallowing
-    the OSError into size 0 silently disabled persist exactly where it
-    must be on)."""
-    key = (sf_dir, table)
-    if key in _PERSIST_SIZE_CACHE:
-        return _PERSIST_SIZE_CACHE[key]
-    path = os.path.join(sf_dir, table)
-    size = None
-    try:
-        if os.path.isdir(path):
-            size = 0
-            for root, _dns, fs in os.walk(path):
-                for f in fs:
-                    try:
-                        size += os.stat(os.path.join(root, f)).st_size
-                    except OSError:
-                        pass
-        elif os.path.isfile(path):
-            size = os.stat(path).st_size
-    except OSError:
-        size = None
-    _PERSIST_SIZE_CACHE[key] = size
-    return size
+    """On-disk size of one fixture table (``session.probe``): ``None``
+    for remote storage (``hdfs://``, ``s3a://``), which callers MUST
+    read as production scale — persist ON, fan-out shuffle OFF, never
+    the fixture-tuned branch.  A missing local table raises
+    ``FileNotFoundError``."""
+    return probe(os.path.join(sf_dir, table))[1]
 
 
 def _should_persist(sf_dir, table: str = "documents.parquet") -> bool:
@@ -83,8 +59,8 @@ def _should_persist(sf_dir, table: str = "documents.parquet") -> bool:
     (recompute = another full corpus scan), so the decision keys on
     the source table's on-disk size: ≥ 64 MiB (env-overridable via
     SPARK_GRAFT_PERSIST_MIN_BYTES, set 0 to always persist) → persist.
-    A non-stat-able path (remote storage) persists: the only corpora
-    that live on hdfs://-like storage are production-sized.  The same
+    A remote path (no size) persists: the only corpora that live on
+    hdfs://-like storage are production-sized.  The same
     expression- and shuffle-level plans run either way — this toggles
     only StorageLevel marking, never results."""
     size = _table_size_bytes(sf_dir, table)
@@ -112,19 +88,11 @@ def _overlap(*thunks):
 
 
 def _max_split_bytes(spark) -> int:
-    """``spark.sql.files.maxPartitionBytes`` as an int (tolerates the
-    k/m/g-suffixed spelling a deployment might set)."""
-    raw = str(spark.conf.get(
-        "spark.sql.files.maxPartitionBytes", "134217728")).strip().lower()
-    mult = {"k": 1024, "m": 1024 ** 2, "g": 1024 ** 3}.get(raw[-1:], 1)
-    digits = raw[:-1] if mult != 1 else raw
-    if raw.endswith("b") and raw[-2:-1] in ("k", "m", "g"):
-        mult = {"k": 1024, "m": 1024 ** 2, "g": 1024 ** 3}[raw[-2:-1]]
-        digits = raw[:-2]
-    try:
-        return int(digits) * mult
-    except ValueError:
-        return 134217728
+    """``spark.sql.files.maxPartitionBytes`` in bytes, parsed by Spark
+    itself (any byte-string spelling Spark accepts: ``128m``,
+    ``128mb``, ``1g``, a bare count)."""
+    return int(spark._jsparkSession.sessionState().conf()
+               .filesMaxPartitionBytes())
 
 
 def _fanout(spark, df, sf_dir=None, table: str = "documents.parquet"):
@@ -141,8 +109,8 @@ def _fanout(spark, df, sf_dir=None, table: str = "documents.parquet"):
     tier).  So the repartition is gated on the input's expected split
     count: on-disk bytes / ``spark.sql.files.maxPartitionBytes`` ≥ the
     session parallelism → the scan already fans out → no shuffle.  A
-    non-stat-able path (remote storage) is production-sized by
-    definition here → no shuffle either (see _table_size_bytes)."""
+    remote path is production-sized by definition here → no shuffle
+    either (see _table_size_bytes)."""
     par = spark.sparkContext.defaultParallelism
     if sf_dir is not None:
         size = _table_size_bytes(sf_dir, table)
@@ -156,27 +124,27 @@ def _fanout(spark, df, sf_dir=None, table: str = "documents.parquet"):
 # The sketch-tier *builder* queries (minhash pairs, simhash fingerprints,
 # winnowed fingerprints/overlaps) each have an exact-bound ``*_check``
 # companion that runs a handful of small actions over the builder's
-# result.  Before this memo, each check re-evaluated the entire sketch
+# result.  Without this memo each check re-evaluated the entire sketch
 # pipeline from the parquet scan — doubling the cost of the most
-# expensive queries in the declared set for no information (the r4
-# perf-weak finding).  Pattern mirrors engine._fixture_dfs: one session
-# at a time, keyed on (result name, corpus dir).
+# expensive queries in the declared set for no information.  Results
+# live in the registry's RESULT class under (result name, corpus dir),
+# versioned by the corpus dir's probe token.
 #
 # Builders ALWAYS recompute and re-publish (their benched cost stays the
 # honest cost of the pipeline); only the checks read the memo.  This is
 # the local analogue of the 100 TB deployment checkpointing its
 # signature/pair tables between the sketch job and downstream audits.
 
-_RESULT_MEMO: dict = {}
 _MEMO_ENABLED = True
 
 
 def set_result_memo(enabled: bool) -> None:
     """Toggle cross-query reuse of builder results.  bench.py disables
     it for the memo-free pass so every per-query time is memo-order-
-    independent (the round-5 judge: a warm query's number silently
-    included tables a memo-adjacent query had already built), then
-    re-enables it for the steady-state semantics."""
+    independent (a warm query's number would otherwise include tables
+    a memo-adjacent query had already built), then re-enables it for
+    the steady-state semantics.  Trained models (the registry's
+    SESSION class) stay memoized either way — see MemoRegistry."""
     global _MEMO_ENABLED
     _MEMO_ENABLED = enabled
     if not enabled:
@@ -184,57 +152,37 @@ def set_result_memo(enabled: bool) -> None:
 
 
 def purge_result_memo() -> None:
-    """Unpersist and forget every published builder result (the session
-    id survives).  The memo-DISABLED bench/scale passes must call this
-    BETWEEN queries: builders persist their results regardless of the
-    fetch toggle (intra-query reuse is part of their design), and
-    Spark's CacheManager plan-matches an identical rebuilt plan onto
-    the still-materialized InMemoryRelation — silently turning the
-    next query's 'full pipeline cost' into a cache read (the r6 review
-    finding)."""
-    sid = _RESULT_MEMO.get("_sid")
-    for key, df in list(_RESULT_MEMO.items()):
-        if key != "_sid":
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-    _RESULT_MEMO.clear()
-    if sid is not None:
-        _RESULT_MEMO["_sid"] = sid
-    # the quantizer side-table memo follows the same discipline: the
-    # memo-off pass must pay the full index side-table load per query
-    _QUANT_MEMO.clear()
+    """Unpersist and forget every published builder result and IVF-PQ
+    quantizer (the registry's RESULT class).  The memo-DISABLED
+    bench/scale passes must call this BETWEEN queries: builders persist
+    their results regardless of the fetch toggle (intra-query reuse is
+    part of their design), and Spark's CacheManager plan-matches an
+    identical rebuilt plan onto the still-materialized InMemoryRelation
+    — silently turning the next query's 'full pipeline cost' into a
+    cache read."""
+    MEMO.purge(RESULT)
 
 
 def _memo_store(spark, sf_dir, name, df):
     """Builder side: persist the freshly-built result and publish it for
-    consumer queries, unpersisting any previous materialization."""
-    import os
-
-    if _RESULT_MEMO.get("_sid") != id(spark):
-        _RESULT_MEMO.clear()  # one session at a time; drop stale handles
-        _RESULT_MEMO["_sid"] = id(spark)
+    consumer queries, unpersisting the previous materialization FIRST
+    (the CacheManager plan-matching rule).  Remote corpora have no
+    token: the result is returned unpersisted and unpublished."""
+    token = probe(sf_dir)[0]
+    if token is None:
+        return df
     key = (name, os.path.realpath(sf_dir))
-    old = _RESULT_MEMO.get(key)
-    if old is not None:
-        try:
-            old.unpersist()
-        except Exception:
-            pass
-    df = df.persist()
-    _RESULT_MEMO[key] = df
-    return df
+    MEMO.purge(RESULT, key)
+    return MEMO.put(spark, RESULT, key, token, df.persist())
 
 
 def _memo_fetch(spark, sf_dir, name, builder):
-    """Consumer side: reuse the published table if this session already
-    built it; otherwise run ``builder`` (which publishes via
-    ``_memo_store``)."""
-    import os
-
-    if _MEMO_ENABLED and _RESULT_MEMO.get("_sid") == id(spark):
-        df = _RESULT_MEMO.get((name, os.path.realpath(sf_dir)))
+    """Consumer side: reuse the published table if this application
+    already built it from the same corpus state; otherwise run
+    ``builder`` (which publishes via ``_memo_store``)."""
+    if _MEMO_ENABLED:
+        df = MEMO.get(spark, RESULT, (name, os.path.realpath(sf_dir)),
+                      probe(sf_dir)[0])
         if df is not None:
             return df
     return builder()
@@ -429,15 +377,8 @@ def doc_minhash_incremental_pruned(spark, sf_dir):
     def _build():
         from garmadon_spark.session import scan_parquet
 
-        # one set of persisted intermediates at a time (the
-        # _PRUNED_EXACT_CACHE rule): release the previous pass's
-        # handles instead of leaking MEMORY_AND_DISK frames per call.
-        # Release BEFORE building — CacheManager matches by plan, and
-        # an identical rebuilt plan unpersisted afterwards silently
-        # drops the fresh entries too (this pass then recomputes every
-        # persisted branch).
-        while _MINHASH_PRUNED_CACHE:
-            _MINHASH_PRUNED_CACHE.pop()()
+        # one live persisted handle; released BEFORE building (MemoRegistry)
+        MEMO.release(spark, "minhash_pruned")
         inc = _minhash_pruned_increment(spark, sf_dir)
         base = _ensure_minhash_pruned_index(spark, sf_dir)
         # scan_parquet: the bands tree has 32x256 leaf dirs — re-listing
@@ -458,15 +399,12 @@ def doc_minhash_incremental_pruned(spark, sf_dir):
             inc, sigs, n=2, num_hashes=64, bands=32, threshold=0.3,
             hist_banded=hb, persist_sigs=_should_persist(sf_dir),
         )
-        _MINHASH_PRUNED_CACHE.append(out._gs_unpersist)
+        MEMO.hold(spark, "minhash_pruned", out._gs_unpersist)
         return _memo_store(
             spark, sf_dir, "minhash_incr_pairs_pruned", out)
 
     return _memo_fetch(
         spark, sf_dir, "minhash_incr_pairs_pruned", _build)
-
-
-_MINHASH_PRUNED_CACHE: list = []
 
 
 def doc_minhash_incremental_pruned_check(spark, sf_dir):
@@ -595,24 +533,18 @@ def doc_simhash_incremental(spark, sf_dir):
     pruned↔re-chunking parity, the exact-re-scrape recall floor, and a
     driver-side Hamming recompute."""
     def _build():
-        # one persisted chunk frame at a time (the _FILT_CACHE rule);
-        # release BEFORE building — an identical rebuilt plan
-        # unpersisted afterwards drops the fresh CacheManager entry too
-        while _SIMHASH_INC_CACHE:
-            _SIMHASH_INC_CACHE.pop()()
+        # one live persisted handle; released BEFORE building (MemoRegistry)
+        MEMO.release(spark, "simhash_incremental")
         base = _ensure_simhash_index(spark, sf_dir)
         out = dedup.incremental_simhash(
             _simhash_increment(spark, sf_dir), None,
             hist_chunked=dedup.read_simhash_index(
                 spark, f"{base}/index"),
         )
-        _SIMHASH_INC_CACHE.append(out._gs_unpersist)
+        MEMO.hold(spark, "simhash_incremental", out._gs_unpersist)
         return _memo_store(spark, sf_dir, "simhash_incremental", out)
 
     return _memo_fetch(spark, sf_dir, "simhash_incremental", _build)
-
-
-_SIMHASH_INC_CACHE: list = []
 
 
 def doc_simhash_incremental_check(spark, sf_dir):
@@ -772,22 +704,15 @@ def doc_incremental_dedup_pruned(spark, sf_dir):
     scan, the exact-dedup twin of the near-dup gate's dp-pruned fetch.
     Shares doc_incremental_dedup's oracle: identical results are the
     proof the pruned read misses nothing."""
-    # one persisted survivors frame at a time (the _FILT_CACHE rule):
-    # release the previous call's handle instead of leaking one per
-    # bench pass — and BEFORE building, since unpersisting an identical
-    # rebuilt plan afterwards drops the fresh CacheManager entry too
-    while _PRUNED_EXACT_CACHE:
-        _PRUNED_EXACT_CACHE.pop()()
+    # one live persisted handle; released BEFORE building (MemoRegistry)
+    MEMO.release(spark, "pruned_exact")
     docs = _docs(spark, sf_dir)
     increment = docs.filter(F.col("doc_id") % 5 == 0)
     base = _ensure_hash_index(spark, sf_dir)
     index = dedup.read_hash_index(spark, f"{base}/index")
     out = dedup.incremental_exact_dedup(increment, index)
-    _PRUNED_EXACT_CACHE.append(out._gs_unpersist)
+    MEMO.hold(spark, "pruned_exact", out._gs_unpersist)
     return out
-
-
-_PRUNED_EXACT_CACHE: list = []
 
 
 # --- text statistics ------------------------------------------------------
@@ -1168,13 +1093,8 @@ def doc_minhash_incremental(spark, sf_dir):
     expansion.  Rows-only (sketch estimates aren't SQL); the adjacent
     ``_check`` pins the exact contract.  Publishes the pair table for
     it."""
-    # one set of persisted intermediates at a time (the
-    # _PRUNED_EXACT_CACHE rule — the propagated handle finally makes
-    # the unpruned path releasable too); release BEFORE building, since
-    # unpersisting an identical rebuilt plan afterwards drops the fresh
-    # CacheManager entry too
-    while _MINHASH_INCR_CACHE:
-        _MINHASH_INCR_CACHE.pop()()
+    # one live persisted handle; released BEFORE building (MemoRegistry)
+    MEMO.release(spark, "minhash_incremental")
     docs = _fanout(spark, _docs(spark, sf_dir), sf_dir)
     inc = docs.filter(F.col("doc_id") % 5 == 0)
     index = _scan(spark, _ensure_sig_index(spark, sf_dir))
@@ -1182,11 +1102,8 @@ def doc_minhash_incremental(spark, sf_dir):
         inc, index, n=2, num_hashes=64, bands=32, threshold=0.3,
         persist_sigs=_should_persist(sf_dir),
     )
-    _MINHASH_INCR_CACHE.append(out._gs_unpersist)
+    MEMO.hold(spark, "minhash_incremental", out._gs_unpersist)
     return _memo_store(spark, sf_dir, "minhash_incr_pairs", out)
-
-
-_MINHASH_INCR_CACHE: list = []
 
 
 def doc_minhash_incremental_check(spark, sf_dir):
@@ -1671,19 +1588,14 @@ def doc_ngram_scrub(spark, sf_dir):
     one gram-hash aggregate, one join back, three array expressions for
     the coverage walk; the published suffix-array pipeline's Spark-
     native stand-in."""
-    # one persisted gram table at a time; release BEFORE building
-    # (identical rebuilt plans — the CacheManager rule)
-    while _NGRAM_SCRUB_CACHE:
-        _NGRAM_SCRUB_CACHE.pop()()
+    # one live persisted handle; released BEFORE building (MemoRegistry)
+    MEMO.release(spark, "ngram_scrub")
     out = dedup.scrub_repeated_ngrams(
         _fanout(spark, _docs(spark, sf_dir), sf_dir), k=8, min_docs=2,
         persist_grams=_should_persist(sf_dir),
     )
-    _NGRAM_SCRUB_CACHE.append(out._gs_unpersist)
+    MEMO.hold(spark, "ngram_scrub", out._gs_unpersist)
     return out
-
-
-_NGRAM_SCRUB_CACHE: list = []
 
 
 DOC_NGRAM_SCRUB_SQL = """
@@ -2047,10 +1959,8 @@ def doc_bm25_batch(spark, sf_dir):
     the broadcast query vocabulary (non-query terms never shuffle), one
     (doc, term) tf shuffle, broadcast idf + query joins, (query, doc)
     sum.  ``tests/test_datapipe_ops.py`` pins the no-cartesian plan."""
-    # one persisted tf table at a time; release BEFORE building
-    # (identical rebuilt plans — the CacheManager rule)
-    while _BM25_BATCH_CACHE:
-        _BM25_BATCH_CACHE.pop()()
+    # one live persisted handle; released BEFORE building (MemoRegistry)
+    MEMO.release(spark, "bm25_batch")
     queries = spark.createDataFrame(
         BM25_BATCH_QUERIES, "query_id int, terms array<string>"
     )
@@ -2058,14 +1968,11 @@ def doc_bm25_batch(spark, sf_dir):
         _fanout(spark, _docs(spark, sf_dir), sf_dir), queries,
         persist_tf=_should_persist(sf_dir),
     )
-    _BM25_BATCH_CACHE.append(out._gs_unpersist)
+    MEMO.hold(spark, "bm25_batch", out._gs_unpersist)
     # publish for doc_bm25_topk (consumer reuse only — this builder
     # always recomputes; the memo-off pass still times the consumer's
     # full pipeline)
     return _memo_store(spark, sf_dir, "bm25_batch_scores", out)
-
-
-_BM25_BATCH_CACHE: list = []
 
 
 _BM25_BATCH_CTES = r"""q(query_id, term) AS (
@@ -2320,20 +2227,14 @@ SELECT vec_id, sem_group, (rn = 1) AS keep FROM ranked
 
 def _index_cache_path(sf_dir: str, source_file: str, prefix: str) -> str:
     """Deterministic per-corpus cache location for a materialized index,
-    keyed by the SOURCE file's identity (path + mtime + size) so a
-    regenerated corpus rebuilds — the index must be keyed on the table
-    it derives from (sig index ↔ documents, IVF ↔ embeddings), not a
-    sibling."""
+    keyed by the SOURCE table's path and probe token so a regenerated
+    corpus rebuilds — the index must be keyed on the table it derives
+    from (sig index ↔ documents, IVF ↔ embeddings), not a sibling."""
     import hashlib
-    import os
     import tempfile
 
-    p = os.path.join(os.path.realpath(sf_dir), source_file)
-    try:
-        st = os.stat(p)
-        key = f"{p}:{st.st_mtime_ns}:{st.st_size}"
-    except OSError:
-        key = p
+    token = probe(os.path.join(sf_dir, source_file))[0]
+    key = f"{os.path.join(os.path.realpath(sf_dir), source_file)}:{token}"
     h = hashlib.sha1(key.encode()).hexdigest()[:16]
     return os.path.join(tempfile.gettempdir(), f"{prefix}{h}")
 
@@ -2342,44 +2243,28 @@ def _ivf_index_path(sf_dir: str) -> str:
     return _index_cache_path(sf_dir, "embeddings.parquet", "garmadon_ivf_")
 
 
-_EMB_COUNT_MEMO: dict = {}
+def _emb_token(sf_dir: str):
+    """The embeddings table's probe token: part of every embeddings-
+    derived memo entry and index stamp, so a corpus REWRITTEN at the
+    same path (even at the same row count) rebuilds instead of serving
+    the stale layout."""
+    return probe(os.path.join(sf_dir, "embeddings.parquet"))[0]
 
 
-def _emb_signature(sf_dir: str) -> str:
-    """Cheap file-state fingerprint (names + sizes + mtimes) of the
-    embeddings table — a memo key component so a corpus that CHANGES at
-    the same path within one session invalidates the count (and with
-    it every index sized from the count) instead of serving the stale
-    layout (r6 advisor)."""
-    import hashlib
-    import os
-
-    p = os.path.join(os.path.realpath(sf_dir), "embeddings.parquet")
-    parts = []
-    if os.path.isdir(p):
-        for e in sorted(os.scandir(p), key=lambda e: e.name):
-            st = e.stat()
-            parts.append(f"{e.name}:{st.st_size}:{st.st_mtime_ns}")
-    elif os.path.exists(p):
-        st = os.stat(p)
-        parts.append(f"{st.st_size}:{st.st_mtime_ns}")
-    return hashlib.sha1(";".join(parts).encode()).hexdigest()[:16]
+def _emb_model(spark, sf_dir, name, build):
+    """Registry SESSION-class memo of one embeddings-derived driver-side
+    value (count, trained codebooks/quantizers): built once per
+    application and embeddings version."""
+    return MEMO.memo(spark, SESSION, (name, os.path.realpath(sf_dir)),
+                     _emb_token(sf_dir), build)
 
 
 def _emb_count(spark, sf_dir) -> int:
-    """Corpus size for index sizing, memoized per (session, corpus,
-    file-state) — the r6 review found the ensure paths re-counting the
-    embeddings table on EVERY probe call, which at 100 TB would put a
-    full corpus scan in front of each partition-pruned probe.  The
-    file-state component drops the entry when the table is rewritten."""
-    import os
-
-    key = (id(spark), os.path.realpath(sf_dir), _emb_signature(sf_dir))
-    if key not in _EMB_COUNT_MEMO:
-        for k in [k for k in _EMB_COUNT_MEMO if k[:2] == key[:2]]:
-            del _EMB_COUNT_MEMO[k]
-        _EMB_COUNT_MEMO[key] = _embs(spark, sf_dir).count()
-    return _EMB_COUNT_MEMO[key]
+    """Corpus size for index sizing — memoized so the ensure paths do
+    not put a full corpus scan in front of each partition-pruned probe
+    (at 100 TB that scan would dominate every probe call)."""
+    return _emb_model(spark, sf_dir, "emb_count",
+                      lambda: _embs(spark, sf_dir).count())
 
 
 def _ivf_cells_for(n: int) -> int:
@@ -2415,7 +2300,7 @@ def _ensure_ivf_index(spark, sf_dir) -> str:
     # the file-state signature is part of the stamp: a corpus REWRITTEN
     # at the same path with the same row count (so the same k) must
     # rebuild, not serve the old corpus's vectors/centroids
-    want = f"k={k};{mode};sig={_emb_signature(sf_dir)}"
+    want = f"k={k};{mode};sig={_emb_token(sf_dir)}"
     stamp = os.path.join(path, "_OK")
     stamped = open(stamp).read() if os.path.exists(stamp) else None
     if stamped != want:
@@ -2489,12 +2374,8 @@ def emb_ann_batch(spark, sf_dir, n_queries: int = 5, k: int = 10):
     serving-representative); the parity contract is width-independent
     (both paths share the cell-selection arithmetic), so the gate loses
     nothing by running at the realistic setting."""
-    # bound the probe-batch cache to ONE live handle across repeated
-    # calls (bench/scale sweeps re-run this in a single session);
-    # release BEFORE building, since unpersisting an identical rebuilt
-    # plan afterwards drops the fresh CacheManager entry too
-    while _ANN_BATCH_CACHE:
-        _ANN_BATCH_CACHE.pop()()
+    # one live persisted handle; released BEFORE building (MemoRegistry)
+    MEMO.release(spark, "ann_batch")
     embs = _embs(spark, sf_dir)
     queries = embs.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"), "embedding"
@@ -2504,11 +2385,8 @@ def emb_ann_batch(spark, sf_dir, n_queries: int = 5, k: int = 10):
     out = similarity.ivf_topk_batch(
         spark, path, queries, k=k, nprobe=nprobe,
     )
-    _ANN_BATCH_CACHE.append(out._gs_unpersist)
+    MEMO.hold(spark, "ann_batch", out._gs_unpersist)
     return out
-
-
-_ANN_BATCH_CACHE: list = []
 
 
 def emb_ann_batch_check(spark, sf_dir, n_queries: int = 5, k: int = 10):
@@ -2558,40 +2436,30 @@ SELECT CAST(5 AS INT) AS n_queries, TRUE AS batch_parity
 """
 
 
-# Driver-side PQ codebooks per (session, corpus) — the codes DataFrame
-# itself rides the _RESULT_MEMO like every other published table.
-_PQ_BOOKS: dict = {}
-
 _PQ_M = 16
 _PQ_KSUB = 64
 
 
 def _ensure_pq(spark, sf_dir):
-    """Train the PQ codebooks + encode the corpus once per (session,
-    corpus); publish the 16-byte-code table for the topk query and the
-    check.  Offline-job semantics like _ensure_ivf_index: a deployment
-    trains periodically and encodes each embedding batch on arrival."""
-    import os
+    """Train the PQ codebooks + encode the corpus once per (application,
+    embeddings version); publish the 16-byte-code table for the topk
+    query and the check.  Offline-job semantics like _ensure_ivf_index:
+    a deployment trains periodically and encodes each embedding batch
+    on arrival."""
+    def _encode(books):
+        return _memo_store(spark, sf_dir, "pq_codes", similarity.pq_encode(
+            _embs(spark, sf_dir), books))
 
-    key = (id(spark), os.path.realpath(sf_dir))
-    if key not in _PQ_BOOKS:
-        _PQ_BOOKS.clear()
+    def _train():
         books = similarity.train_pq(
             _embs(spark, sf_dir), m=_PQ_M, ksub=_PQ_KSUB, iterations=5
         )
-        _PQ_BOOKS[key] = books
-        _memo_store(
-            spark, sf_dir, "pq_codes",
-            similarity.pq_encode(_embs(spark, sf_dir), books),
-        )
-    codes = _memo_fetch(
-        spark, sf_dir, "pq_codes",
-        lambda: _memo_store(
-            spark, sf_dir, "pq_codes",
-            similarity.pq_encode(_embs(spark, sf_dir), _PQ_BOOKS[key]),
-        ),
-    )
-    return _PQ_BOOKS[key], codes
+        _encode(books)
+        return books
+
+    books = _emb_model(spark, sf_dir, "pq_books", _train)
+    return books, _memo_fetch(spark, sf_dir, "pq_codes",
+                              lambda: _encode(books))
 
 
 def emb_pq_topk(spark, sf_dir, query_vec_id: int = 0, k: int = 10):
@@ -2662,40 +2530,33 @@ SELECT CAST(10 AS INT) AS k, TRUE AS recall_ok,
 """
 
 
-_IVFPQ_MEMO: dict = {}
-
-
 def _ensure_ivfpq(spark, sf_dir):
     """Train coarse+fine quantizers and encode the corpus once per
-    (session, corpus) — the IVF-PQ index build is the offline job; the
-    queries only probe.  The codes table rides the _RESULT_MEMO."""
-    import os
-
+    (application, embeddings version) — the IVF-PQ index build is the
+    offline job; the queries only probe.  The codes table is a
+    published result."""
     # same constant-cell-size rule as the plain IVF index (floored at
     # 8, so every ≤sf0.1 fixture keeps the r1-r5 layout bit-for-bit);
     # the IVFPQ probe is linear either way, but constant cells keep the
-    # partition-pruning fraction meaningful as the corpus grows.
-    # k_cells AND the file-state signature are PART OF THE KEY (r6
-    # advisor + r7 review): a corpus resize that moves the cell count,
-    # or a same-count rewrite at the same path, can't keep serving
-    # stale centroids/codebooks
+    # partition-pruning fraction meaningful as the corpus grows.  The
+    # cell count is a function of the embeddings version, which the
+    # memo entry already carries.
     k_cells = _ivf_cells_for(_emb_count(spark, sf_dir))
-    key = (id(spark), os.path.realpath(sf_dir), k_cells,
-           _emb_signature(sf_dir))
-    if key not in _IVFPQ_MEMO:
-        _IVFPQ_MEMO.clear()
+
+    def _train():
         cents, books, codes = similarity.build_ivfpq(
             _embs(spark, sf_dir), n_centroids=k_cells, m=_PQ_M,
             ksub=_PQ_KSUB,
         )
-        _IVFPQ_MEMO[key] = (cents, books)
         # materialize the published codes into the memo cache, THEN
         # release the build's internal persisted pass — otherwise the
         # hierarchical build's cached full-corpus assignment leaks for
-        # the session lifetime (r7 review)
+        # the session lifetime
         _memo_store(spark, sf_dir, "ivfpq_codes", codes).count()
         getattr(codes, "_gs_unpersist", lambda: None)()
-    cents, books = _IVFPQ_MEMO[key]
+        return cents, books
+
+    cents, books = _emb_model(spark, sf_dir, "ivfpq", _train)
     codes = _memo_fetch(
         spark, sf_dir, "ivfpq_codes",
         lambda: _memo_store(
@@ -2800,12 +2661,14 @@ def doc_minhash_check(spark, sf_dir):
                 "ordered"),
         ).head(),
     )
+    # a corpus with no near-duplicate pair has an empty table: min and
+    # sum are NULL there and every per-pair contract holds vacuously
     return spark.createDataFrame(
         [(
             bool(agg.n > 0),
-            bool(agg.minj >= 0.3),
+            bool(agg.minj is None or agg.minj >= 0.3),
             bool(agg.distinct_pairs == agg.n),
-            bool(agg.ordered == agg.n),
+            bool((agg.ordered or 0) == agg.n),
             bool(missed == 0),
         )],
         "nonempty boolean, above_threshold boolean, pairs_unique boolean,"
@@ -3308,23 +3171,16 @@ def doc_line_dedup(spark, sf_dir):
         "doc_id",
         F.expr(f"array_join({_EIGHT_TOKEN_LINES}, '\\n')").alias("text"),
     )
-    # one persisted line table at a time (the _PRUNED_EXACT_CACHE rule).
-    # Release BEFORE re-persisting: CacheManager matches by plan, so
-    # unpersisting the previous call's identical line table afterwards
-    # would silently drop the fresh entry too.
-    while _LINE_DEDUP_CACHE:
-        _LINE_DEDUP_CACHE.pop()()
+    # one live persisted handle; released BEFORE building (MemoRegistry)
+    MEMO.release(spark, "line_dedup")
     rf = remove_frequent_lines(ml, min_df=2, delim="\n",
                                persist_lines=_should_persist(sf_dir))
     out = rf.select(
         "doc_id", "n_lines_before", "n_lines_kept",
         F.length("text").cast("long").alias("chars_kept"),
     )
-    _LINE_DEDUP_CACHE.append(rf._gs_unpersist)
+    MEMO.hold(spark, "line_dedup", rf._gs_unpersist)
     return out
-
-
-_LINE_DEDUP_CACHE: list = []
 
 
 DOC_LINE_DEDUP_SQL = """
@@ -3459,7 +3315,7 @@ def _ensure_drift_index(spark, sf_dir):
     n = _emb_count(spark, sf_dir)
     k = _ivf_cells_for(n)
     path = _drift_index_path(sf_dir)
-    want = f"k={k};sig={_emb_signature(sf_dir)}"
+    want = f"k={k};sig={_emb_token(sf_dir)}"
     stamp = os.path.join(path, "_OK")
     stamped = open(stamp).read() if os.path.exists(stamp) else None
     if stamped != want:
@@ -3487,7 +3343,7 @@ def _ensure_retrained_index(spark, sf_dir):
     dpath, n = _ensure_drift_index(spark, sf_dir)
     k2 = _ivf_cells_for(2 * n)
     path = _retrain_index_path(sf_dir)
-    want = f"k={k2};sig={_emb_signature(sf_dir)}"
+    want = f"k={k2};sig={_emb_token(sf_dir)}"
     stamp = os.path.join(path, "_OK")
     stamped = open(stamp).read() if os.path.exists(stamp) else None
     if stamped != want:
@@ -3897,18 +3753,11 @@ SELECT doc_id, lang, n_chars FROM ranked WHERE rk <= 20
 # r8 verdict ranked highest ("a PQ deployment under drift can re-train
 # its coarse layer but keeps stale codebooks").
 
-_OPQ_MEMO: dict = {}
-
-
 def _ensure_opq(spark, sf_dir):
-    """Fit the OPQ rotation + raw-PQ baseline once per (session,
-    corpus); both fits are bounded-sample driver work, the two
-    corpus-wide error measurements are one Arrow scan each."""
-    import os
-
-    key = (id(spark), os.path.realpath(sf_dir), _emb_signature(sf_dir))
-    if key not in _OPQ_MEMO:
-        _OPQ_MEMO.clear()
+    """Fit the OPQ rotation + raw-PQ baseline once per (application,
+    embeddings version); both fits are bounded-sample driver work, the
+    two corpus-wide error measurements are one Arrow scan each."""
+    def _fit():
         embs = _embs(spark, sf_dir)
         rot, books, errs = similarity.fit_opq(
             embs, m=_PQ_M, ksub=_PQ_KSUB, iterations=5,
@@ -3921,9 +3770,9 @@ def _ensure_opq(spark, sf_dir):
         opq = similarity.pq_quantization_error(
             embs, books, rotation=rot
         ).head()
-        _OPQ_MEMO[key] = (rot, errs, float(raw.mse), float(opq.mse),
-                          int(raw.n))
-    return _OPQ_MEMO[key]
+        return (rot, errs, float(raw.mse), float(opq.mse), int(raw.n))
+
+    return _emb_model(spark, sf_dir, "opq", _fit)
 
 
 def emb_opq(spark, sf_dir):
@@ -3999,35 +3848,17 @@ _PQ_FIT_ITERS = 3
 _OPQ_FIT_ITERS = 6
 
 
-_QUANT_MEMO: dict = {}
-
-
 def _ivfpq_quantizer(spark, path):
-    """Session memo of ``load_ivfpq_quantizer`` keyed on the index's
-    ``_OK`` stamp — the blue/green generation identity (a rebuild
-    writes a NEW stamp string, so a stale quantizer can never serve;
+    """``load_ivfpq_quantizer`` memoized (registry RESULT class) on the
+    index's ``_OK`` stamp file — the blue/green generation identity (a
+    rebuild writes a NEW stamp, so a stale quantizer can never serve;
     the streaming server's generation-checked cache applied to the
     batch checks).  Centroid-sized metadata (k·d + m·ksub·dsub + d²
-    doubles), never data-sized; ``purge_quantizer_memo`` (wired into
-    the bench's memo-off purge) drops it so the memo-off pass still
-    pays the full side-table load."""
-    import os
-
-    try:
-        with open(os.path.join(path, "_OK")) as fh:
-            stamp = fh.read()
-    except OSError:
-        stamp = None
-    key = (id(spark), path, stamp)
-    if key not in _QUANT_MEMO:
-        if len(_QUANT_MEMO) > 8:
-            _QUANT_MEMO.clear()
-        _QUANT_MEMO[key] = similarity.load_ivfpq_quantizer(spark, path)
-    return _QUANT_MEMO[key]
-
-
-def purge_quantizer_memo() -> None:
-    _QUANT_MEMO.clear()
+    doubles), never data-sized; ``purge_result_memo`` drops it so the
+    memo-off pass still pays the full side-table load."""
+    return MEMO.memo(spark, RESULT, ("quantizer", path),
+                     probe(os.path.join(path, "_OK"))[0],
+                     lambda: similarity.load_ivfpq_quantizer(spark, path))
 
 
 def _ivfpq_drift_path(sf_dir: str) -> str:
@@ -4053,7 +3884,7 @@ def _ensure_ivfpq_drift_index(spark, sf_dir):
     # changing _PQ_M/_PQ_KSUB/the fit iteration constants must rebuild,
     # not silently serve an index built with the old quantizer shape
     want = (f"k={k};m={_PQ_M};ks={_PQ_KSUB};pi={_PQ_FIT_ITERS};"
-            f"oi={_OPQ_FIT_ITERS};sig={_emb_signature(sf_dir)}")
+            f"oi={_OPQ_FIT_ITERS};sig={_emb_token(sf_dir)}")
     stamp = os.path.join(path, "_OK")
     stamped = open(stamp).read() if os.path.exists(stamp) else None
     if stamped != want:
@@ -4085,7 +3916,7 @@ def _ensure_ivfpq_retrained_index(spark, sf_dir):
     k2 = _ivf_cells_for(2 * n)
     path = _ivfpq_retrain_path(sf_dir)
     want = (f"k={k2};m={_PQ_M};ks={_PQ_KSUB};pi={_PQ_FIT_ITERS};"
-            f"oi={_OPQ_FIT_ITERS};sig={_emb_signature(sf_dir)}")
+            f"oi={_OPQ_FIT_ITERS};sig={_emb_token(sf_dir)}")
     stamp = os.path.join(path, "_OK")
     stamped = open(stamp).read() if os.path.exists(stamp) else None
     if stamped != want:
@@ -4871,7 +4702,7 @@ def _ensure_eadmitted(spark, sf_dir):
     want = (f"seed={_EADMIT_SEED_LO}-{_EADMIT_SEED_HI};"
             f"b={_EADMIT_B1}/{_EADMIT_B2};tau={_EADMIT_TAU};"
             f"c={_EADMIT_CELLS};resub={_EADMIT_RESUB};"
-            f"sig={_emb_signature(sf_dir)}")
+            f"sig={_emb_token(sf_dir)}")
     if os.path.exists(stamp) and open(stamp).read() == want:
         return base
     shutil.rmtree(base, ignore_errors=True)
@@ -5109,7 +4940,6 @@ SELECT CAST((SELECT COUNT(*) FROM embeddings
 # --- filtered vector search (r11) --------------------------------------
 
 _FILT_QUERIES = 4
-_FILT_CACHE: list = []
 
 
 def emb_ann_filtered(spark, sf_dir):
@@ -5123,10 +4953,8 @@ def emb_ann_filtered(spark, sf_dir):
     value-hash oracle (the only ANN leg DuckDB can replicate
     bit-for-bit); the approximate widths reuse the same `allowed`
     plumbing with recall governed by the documented nprobe trade."""
-    # release BEFORE building (identical rebuilt plans: an unpersist
-    # afterwards drops the fresh CacheManager entry too)
-    while _FILT_CACHE:
-        _FILT_CACHE.pop()()
+    # one live persisted handle; released BEFORE building (MemoRegistry)
+    MEMO.release(spark, "ann_filtered")
     embs = _embs(spark, sf_dir)
     path = _ensure_ivf_index(spark, sf_dir)
     cells = _ivf_cells_for(_emb_count(spark, sf_dir))
@@ -5138,7 +4966,7 @@ def emb_ann_filtered(spark, sf_dir):
         spark, path, queries, k=_RECALL_K, nprobe=cells,
         exclude_self=True, allowed=allowed,
     )
-    _FILT_CACHE.append(out._gs_unpersist)
+    MEMO.hold(spark, "ann_filtered", out._gs_unpersist)
     return out.orderBy("query_id", "rank")
 
 
@@ -5180,10 +5008,8 @@ def emb_ann_filtered_per_query(spark, sf_dir):
     per-query brute-force-filtered top-k with a FULL value-hash DuckDB
     oracle; approximate widths reuse the same plumbing under the
     documented nprobe trade."""
-    # release BEFORE building (identical rebuilt plans: an unpersist
-    # afterwards drops the fresh CacheManager entry too)
-    while _FILT_CACHE:
-        _FILT_CACHE.pop()()
+    # one live persisted handle; released BEFORE building (MemoRegistry)
+    MEMO.release(spark, "ann_filtered")
     embs = _embs(spark, sf_dir)
     path = _ensure_ivf_index(spark, sf_dir)
     cells = _ivf_cells_for(_emb_count(spark, sf_dir))
@@ -5202,7 +5028,7 @@ def emb_ann_filtered_per_query(spark, sf_dir):
         spark, path, queries, k=_RECALL_K, nprobe=cells,
         exclude_self=True, allowed=pairs,
     )
-    _FILT_CACHE.append(out._gs_unpersist)
+    MEMO.hold(spark, "ann_filtered", out._gs_unpersist)
     return out.orderBy("query_id", "rank")
 
 
@@ -5258,13 +5084,8 @@ def doc_curation_funnel(spark, sf_dir):
     Rows-only (the near-dup stage is engine-defined);
     ``doc_curation_funnel_check`` pins every SQL-expressible stage
     count by value."""
-    # one set of persisted stage frames at a time (the
-    # _MINHASH_INCR_CACHE rule) — released BEFORE rebuilding: the
-    # rebuilt stage plans are identical, and CacheManager's
-    # plan-matching unpersist would otherwise drop the fresh entries
-    # right after they were marked
-    while _FUNNEL_CACHE:
-        _FUNNEL_CACHE.pop()()
+    # one live persisted handle; released BEFORE building (MemoRegistry)
+    MEMO.release(spark, "curation_funnel")
     docs = _docs(spark, sf_dir).select("doc_id", "text", "n_chars")
 
     def stage(df, name, text_col="text", n_col=None):
@@ -5354,11 +5175,8 @@ def doc_curation_funnel(spark, sf_dir):
     # emb_diverse_sample precedent): the builder always recomputes —
     # its benched cost stays the pipeline's honest cost — and the
     # memo-off bench pass still times the check's full pipeline.
-    _FUNNEL_CACHE.append(out._gs_unpersist)
+    MEMO.hold(spark, "curation_funnel", out._gs_unpersist)
     return _memo_store(spark, sf_dir, "curation_funnel", out)
-
-
-_FUNNEL_CACHE: list = []
 
 
 def doc_curation_funnel_check(spark, sf_dir):

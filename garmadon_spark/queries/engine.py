@@ -85,22 +85,6 @@ GROUP BY 1
 """
 
 
-_FIXTURE_MEMO: dict = {}
-
-
-def _fixture_dfs(spark, n_apps=8, seed=42):
-    """Session-scoped memo of the seeded fixture corpus — the two
-    fixture-backed engine queries share one generation."""
-    key = (id(spark), n_apps, seed)
-    if key not in _FIXTURE_MEMO:
-        from garmadon_spark.sources import fixtures
-
-        _FIXTURE_MEMO.clear()  # one session at a time; drop stale handles
-        _FIXTURE_MEMO[key] = fixtures.to_spark(spark, n_apps=n_apps,
-                                               seed=seed)
-    return _FIXTURE_MEMO[key]
-
-
 def fixture_corpus_dir(n_apps: int = 8, seed: int = 42) -> str:
     """On-disk parquet copy of the seeded fixture corpus under a
     deterministic /tmp path, written once (atomic rename) — lets the

@@ -16,7 +16,10 @@ knob is chosen to also be the right default on a 1000-executor cluster:
 
 from __future__ import annotations
 
+import hashlib
 import os
+import re
+import stat
 
 from pyspark.sql import SparkSession
 
@@ -100,74 +103,172 @@ TPCH_TABLES = (
 
 
 # ---------------------------------------------------------------------------
-# Plan-level scan memo (r14, guide §1.2): every declared query used to pay
-# ~85-105 ms of pure driver time PER TABLE just constructing the parquet
-# scan (py4j round trip + file listing + footer/schema read) — per call,
-# even warm, times 199 queries times 3 bench passes.  A parquet-scan
-# DataFrame is an immutable logical plan; reusing the object is NOT result
-# caching (no .cache(), no CacheManager entry — every action still reads
-# the parquet files from disk).  The memo key carries a stat-derived
-# version token so a rewritten/regenerated input invalidates the entry;
-# it is scoped to the read-only base/fixture tables (load_table /
-# engine._corpus_tables) — mutable index trees keep fresh reads.
-_SCAN_MEMO: dict = {}
+# One stat probe and one memo registry for the whole engine.
+
+_URI_SCHEME = re.compile(r"^[A-Za-z][A-Za-z0-9+.-]*://")
 
 
-def _path_version(path: str):
-    """Change token: a full recursive stat-walk (names, mtimes, sizes).
-    Any file added, removed or rewritten ANYWHERE under the path —
-    including appends two partition levels deep in the prefix-
-    partitioned index trees — moves the token.  Cost is ~10 ms per
-    1,000 files on a local fs, an order of magnitude cheaper than
-    Spark re-listing the tree through the JVM.
+def probe(path: str):
+    """``(token, nbytes, is_remote)`` for one file or directory tree.
 
-    Raises OSError for paths this process cannot ``os.stat`` (remote
-    storage: ``hdfs://``, ``s3a://``); callers fall back to a plain
-    unmemoized ``spark.read.parquet`` there — the memo is a local-mode
-    driver-latency optimization, never a correctness dependency."""
+    A path with a URI scheme (``hdfs://``, ``s3a://``) is remote:
+    ``(None, None, True)`` — no token, so nothing keyed on it is
+    memoized, and callers read the ``None`` size as "production
+    scale" (persist ON, fan-out shuffle OFF).  A local path is
+    stat-walked recursively: every file's relative name, mtime and
+    size feed the token, so a file added, removed or rewritten
+    anywhere under the path moves it (~10 ms per 1,000 files, an
+    order of magnitude cheaper than Spark re-listing the tree);
+    ``nbytes`` is the files' total size.  A missing local path raises
+    ``FileNotFoundError``: a misspelled ``sf_dir`` fails loudly instead
+    of being read as production scale."""
+    if _URI_SCHEME.match(path):
+        return None, None, True
     st = os.stat(path)
-    ver = [st.st_mtime_ns, st.st_size]
-    if os.path.isdir(path):
+    h = hashlib.sha1(f"{st.st_mtime_ns}:{st.st_size}".encode())
+    nbytes = st.st_size
+    if stat.S_ISDIR(st.st_mode):
+        nbytes = 0
         for root, dirs, files in os.walk(path):
             dirs.sort()
+            rel = root[len(path):]
             for f in sorted(files):
                 try:
                     fs = os.stat(os.path.join(root, f))
                 except OSError:
-                    continue
-                ver.append(f)
-                ver.append(fs.st_mtime_ns)
-                ver.append(fs.st_size)
-    return tuple(ver)
+                    continue  # removed mid-walk
+                h.update(f"{rel}/{f}:{fs.st_mtime_ns}:{fs.st_size};".encode())
+                nbytes += fs.st_size
+    return h.hexdigest()[:16], nbytes, False
+
+
+RESULT = "result"
+SESSION = "session"
+
+
+class MemoRegistry:
+    """The engine's one cache, scoped to ONE Spark application: the
+    first call that brings a different ``applicationId`` drops every
+    entry and slot (an old session's handles are never served).
+
+    Entries are keyed by ``(class, name)`` and carry a version token —
+    a ``probe`` token of the file they derive from — and a lookup hits
+    only on an equal token, so a rewritten input is rebuilt, never
+    served stale.  A ``None`` token (remote storage) is never stored.
+    Memoizing a DataFrame reuses its immutable plan (and, for
+    persisted results, its cache blocks); every action still executes.
+
+    Two classes, one purge each:
+
+    - ``RESULT``: published builder tables and IVF-PQ quantizer side
+      tables.  ``purge(RESULT)`` (``datapipe.purge_result_memo``)
+      unpersists and drops them; the memo-off bench pass calls it
+      between queries so each query pays its full pipeline.
+    - ``SESSION``: scan plans, embedding counts and trained PQ /
+      IVF-PQ / OPQ models.  They live as long as the
+      application, so the memo-off pass keeps reusing trained models
+      on purpose: training is offline-job work done once per corpus
+      version, not part of any query's pipeline cost.
+
+    Slots hold the ONE live persisted handle of a repeatable query
+    (``release`` + ``hold``).  A caller releases the previous handle
+    BEFORE it builds again: CacheManager matches cached data by plan,
+    so unpersisting an identical old plan after the rebuild would drop
+    the fresh entry too."""
+
+    def __init__(self):
+        self._sc = self._app = None
+        self._entries: dict = {}
+        self._slots: dict = {}
+
+    def _scope(self, spark) -> None:
+        # the held SparkContext reference makes the identity check safe
+        # (a live object's id is never reused) and skips a py4j round
+        # trip per lookup; a new context is checked by applicationId.
+        # ``_sc`` is published last, so a concurrent ``_overlap`` thread
+        # that takes the fast path never sees the old entries.
+        sc = spark.sparkContext
+        if sc is self._sc:
+            return
+        app = sc.applicationId
+        if app != self._app:
+            self._entries.clear()
+            self._slots.clear()
+            self._app = app
+        self._sc = sc
+
+    def get(self, spark, cls: str, name, token):
+        """The value published under ``name`` at ``token``, else None."""
+        self._scope(spark)
+        hit = self._entries.get((cls, name))
+        if token is not None and hit is not None and hit[0] == token:
+            return hit[1]
+        return None
+
+    def put(self, spark, cls: str, name, token, value):
+        """Publish ``value`` under ``name`` at ``token``; returns it."""
+        self._scope(spark)
+        if token is not None:
+            self._entries[(cls, name)] = (token, value)
+        return value
+
+    def memo(self, spark, cls: str, name, token, build):
+        hit = self.get(spark, cls, name, token)
+        if hit is not None:
+            return hit
+        return self.put(spark, cls, name, token, build())
+
+    def purge(self, cls: str, name=None) -> None:
+        """Drop one entry (or every entry) of ``cls``, unpersisting
+        DataFrame values."""
+        if name is None:  # list(): an atomic snapshot under the GIL
+            keys = [k for k in list(self._entries) if k[0] == cls]
+        else:
+            keys = [(cls, name)]
+        for key in keys:
+            hit = self._entries.pop(key, None)
+            if hit is not None and hasattr(hit[1], "unpersist"):
+                try:
+                    hit[1].unpersist()
+                except Exception:
+                    pass  # a handle of a stopped context
+
+    def hold(self, spark, slot: str, release) -> None:
+        self._scope(spark)
+        self._slots[slot] = release
+
+    def release(self, spark, slot: str) -> None:
+        self._scope(spark)
+        release = self._slots.pop(slot, None)
+        if release is not None:
+            release()
+
+
+MEMO = MemoRegistry()
 
 
 def scan_parquet(spark: SparkSession, path: str, schema: str | None = None,
                  options: dict | None = None):
     """Memoized parquet scan: returns the same (immutable) DataFrame for
-    an unchanged path within one Spark application.  Plan reuse only —
-    execution always re-reads the files.  ``schema``/``options`` become
-    part of the memo key (the partitioned index trees pass an explicit
-    schema + basePath; re-listing their thousands of leaf dirs per
-    construction was the dominant cost)."""
-    key = (spark.sparkContext.applicationId, path, schema,
-           tuple(sorted(options.items())) if options else None)
-    try:
-        ver = _path_version(path)
-    except OSError:
-        ver = None  # remote storage: no stat token → no memo entry
-    if ver is not None:
-        hit = _SCAN_MEMO.get(key)
-        if hit is not None and hit[0] == ver:
-            return hit[1]
+    an unchanged path within one Spark application.  Constructing a
+    scan costs ~85-105 ms of driver time (py4j round trip, listing,
+    footer read) per table per call; reusing the plan object is not
+    result caching — every action still reads the files.  ``schema``/
+    ``options`` are part of the name (the partitioned index trees pass
+    an explicit schema + basePath; re-listing their thousands of leaf
+    dirs per construction was the dominant cost)."""
+    name = ("scan", path, schema,
+            tuple(sorted(options.items())) if options else None)
+    token = probe(path)[0]
+    hit = MEMO.get(spark, SESSION, name, token)
+    if hit is not None:
+        return hit
     reader = spark.read
     if schema:
         reader = reader.schema(schema)
     if options:
         reader = reader.options(**options)
-    df = reader.parquet(path)
-    if ver is not None:
-        _SCAN_MEMO[key] = (ver, df)
-    return df
+    return MEMO.put(spark, SESSION, name, token, reader.parquet(path))
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str):
@@ -196,26 +297,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         # memoize the POST-normalization frame: the ts probe (a py4j
         # schema fetch) and the withColumn are part of the per-call cost
-        key = (spark.sparkContext.applicationId, path, "events-norm")
-        try:
-            ver = _path_version(path)
-        except OSError:
-            ver = None  # remote storage: no stat token → no memo entry
-        if ver is not None:
-            hit = _SCAN_MEMO.get(key)
-            if hit is not None and hit[0] == ver:
-                return hit[1]
-        df = spark.read.parquet(path)
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type == "timestamp_ntz":
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-        if ver is not None:
-            _SCAN_MEMO[key] = (ver, df)
-        return df
+        key, token = ("events-norm", path), probe(path)[0]
+        df = MEMO.get(spark, SESSION, key, token)
+        if df is None:
+            df = spark.read.parquet(path)
+            ts_type = dict(df.dtypes).get("ts")
+            if ts_type == "bigint":
+                df = df.withColumn(
+                    "ts", F.timestamp_micros(F.expr("ts div 1000")))
+            elif ts_type == "timestamp_ntz":
+                df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+        return MEMO.put(spark, SESSION, key, token, df)
     return scan_parquet(spark, path)
-
-
-def load_tables(spark: SparkSession, sf_dir: str, names=TPCH_TABLES):
-    return {n: load_table(spark, sf_dir, n) for n in names}

@@ -131,17 +131,3 @@ def dedup_stream(
         .dropDuplicatesWithinWatermark(list(key_cols))
         .drop("event_time")
     )
-
-
-def run_to_memory(df: DataFrame, name: str, available_now: bool = True):
-    """Test/debug sink: run the streaming query into an in-memory table."""
-    writer = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append" if df.isStreaming else "append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    q = writer.start()
-    q.awaitTermination()
-    return q

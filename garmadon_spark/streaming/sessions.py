@@ -35,7 +35,6 @@ from typing import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StatefulProcessor
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     IntegerType,
@@ -505,78 +504,6 @@ def make_session_fn(max_created_files: int = 100_000,
             yield pd.DataFrame([], columns=[f.name for f in RESULT_SCHEMA])
 
     return session_fn
-
-
-class SessionStatefulProcessor(StatefulProcessor):
-    """Spark 4-native form of the session engine on the
-    ``transformWithState`` operator (SPARK-49564): identical semantics
-    to ``session_heuristics`` (same _process_row/_finalize core), state
-    held in a named ValueState on the RocksDB state store.
-
-    Why offer both: applyInPandasWithState is the Spark 3.4+ surface
-    (HDFS-backed store, whole-state round-trip per key per batch);
-    transformWithState adds granular state types, TTL, and timers, and
-    RocksDB changelog checkpointing keeps per-batch commit cost
-    proportional to the CHANGED keys — the right backend when millions
-    of YARN apps are live at once."""
-
-    def __init__(self, max_created_files: int = 100_000,
-                 heuristics: list[SessionHeuristic] | None = None):
-        self.max_created_files = max_created_files
-        self.heuristics = (list(_REGISTERED) if heuristics is None
-                           else list(heuristics))
-
-    def init(self, handle) -> None:
-        self._state = handle.getValueState("session", STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):
-        app_id, attempt_id = key
-        s = (json.loads(self._state.get()[0]) if self._state.exists()
-             else _new_state())
-        s.setdefault("ext", {})
-        pdf = pd.concat(list(rows), ignore_index=True)
-        pdf = pdf.sort_values(["timestamp", "kafka_offset"])
-        for r in pdf.itertuples():
-            _process_row(s, r, self.heuristics)
-        if s["seen"] and not s["live"]:
-            results = _finalize(app_id, attempt_id, s,
-                                self.max_created_files, self.heuristics)
-            self._state.clear()
-            yield pd.DataFrame(results,
-                               columns=[f.name for f in RESULT_SCHEMA])
-        else:
-            self._state.update((json.dumps(s),))
-
-    def handleInitialState(self, key, initialState, timerValues) -> None:
-        pass
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        yield from ()
-
-    def close(self) -> None:
-        pass
-
-
-def session_heuristics_tws(
-    events: DataFrame, max_created_files: int = 100_000,
-    heuristics: list[SessionHeuristic] | None = None,
-) -> DataFrame:
-    """``session_heuristics`` on the transformWithState operator.
-    Requires (a) the RocksDB state store provider
-    (spark.sql.streaming.stateStore.providerClass =
-    ...RocksDBStateStoreProvider) set on the session before starting
-    the query, and (b) the ``protobuf`` Python package (the operator's
-    Python↔JVM state protocol) — environments without it use
-    ``session_heuristics``, which is semantically identical."""
-    return (
-        events.groupBy("application_id", "attempt_id")
-        .transformWithStateInPandas(
-            SessionStatefulProcessor(max_created_files, heuristics),
-            outputStructType=RESULT_SCHEMA,
-            outputMode="append",
-            timeMode="none",
-        )
-    )
 
 
 def session_heuristics(

@@ -1687,6 +1687,7 @@ def test_rebuilt_query_persist_survives_release_cycle(spark):
     corpus sits under the size-adaptive persist threshold, so the
     persist path is forced for the test's scope."""
     from garmadon_spark.queries import datapipe
+    from garmadon_spark.session import MEMO
 
     sf = "/root/testdata/sf0.001"
     old = datapipe._PERSIST_MIN_BYTES
@@ -1699,5 +1700,28 @@ def test_rebuilt_query_persist_survives_release_cycle(spark):
     finally:
         datapipe._PERSIST_MIN_BYTES = old
         # leave no live handle behind for later tests
-        while datapipe._LINE_DEDUP_CACHE:
-            datapipe._LINE_DEDUP_CACHE.pop()()
+        MEMO.release(spark, "line_dedup")
+
+
+def test_minhash_check_on_corpus_without_near_duplicates(spark, tmp_path):
+    """A corpus with no near-duplicate pair gives an empty pair table:
+    the check returns its one row (nonempty=False, every per-pair
+    contract vacuously true) instead of failing on NULL aggregates."""
+    import pandas as pd
+
+    from garmadon_spark.queries import datapipe
+
+    texts = [" ".join(f"w{i}x{j}" for j in range(12)) for i in range(6)]
+    pd.DataFrame({
+        "doc_id": list(range(6)), "text": texts,
+        "lang": ["en"] * 6, "source": ["s"] * 6,
+        "n_chars": [len(t) for t in texts],
+    }).to_parquet(tmp_path / "documents.parquet")
+    try:
+        row = datapipe.doc_minhash_check(spark, str(tmp_path)).collect()
+    finally:
+        datapipe.purge_result_memo()
+    assert [r.asDict() for r in row] == [{
+        "nonempty": False, "above_threshold": True, "pairs_unique": True,
+        "pairs_ordered": True, "exact_dups_recalled": True,
+    }]

@@ -9,6 +9,7 @@ columns, and the bucketed layout eliminating the fact-join shuffle
 
 from __future__ import annotations
 
+import os
 import re
 
 SF = "/root/testdata/sf0.01"
@@ -137,6 +138,7 @@ def test_jaccard_tier_shares_common_counts(spark):
     )
 
     from garmadon_spark.queries.datapipe import _jaccard_common
+    from garmadon_spark.session import MEMO, RESULT, probe
 
     purge_result_memo()
     try:
@@ -151,8 +153,13 @@ def test_jaccard_tier_shares_common_counts(spark):
         assert not scans, plan
         # doc_dup_groups checkpoints through components(), so its final
         # plan is an ExistingRDD scan — pin the reuse at the fetch:
-        # the published handle IS what a consumer receives
-        assert _jaccard_common(spark, SF) is _jaccard_common(spark, SF)
+        # the published handle IS what a consumer receives, and it is
+        # the registry's RESULT entry for this corpus version
+        published = MEMO.get(spark, RESULT,
+                             ("jaccard_common", os.path.realpath(SF)),
+                             probe(SF)[0])
+        assert published is not None
+        assert _jaccard_common(spark, SF) is published
         doc_dup_groups(spark, SF)  # must run green off the shared table
     finally:
         purge_result_memo()

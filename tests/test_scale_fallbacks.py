@@ -6,23 +6,25 @@ Two classes of local-mode assumption are pinned here:
    scan already fans out to the session parallelism (a 100 TB table
    arrives as thousands of splits; an unconditional ``repartition``
    round-robin-shuffles the entire corpus for nothing).
-2. The driver-side stat probes (``_table_size_bytes`` /
-   ``_should_persist`` / ``_path_version`` → ``scan_parquet``) must
+2. The driver-side stat probe (``session.probe`` behind
+   ``_table_size_bytes`` / ``_should_persist`` / ``scan_parquet``) must
    degrade to the scale-correct branch — persist ON, memo OFF, fan-out
-   shuffle OFF — when the path is not ``os.stat``-able (hdfs://, s3a://),
-   instead of raising or silently picking the fixture-tuned branch.
+   shuffle OFF — on a remote path (hdfs://, s3a://), and a missing
+   LOCAL path must raise instead of reading as production scale.
 """
 
 from __future__ import annotations
 
 import os
 
+import pytest
+
 from garmadon_spark.queries import datapipe
 from garmadon_spark.queries.datapipe import (
     _fanout, _should_persist, _table_size_bytes,
 )
 from garmadon_spark import session as gs_session
-from garmadon_spark.session import scan_parquet
+from garmadon_spark.session import MEMO, scan_parquet
 
 
 def _phys_plan(df) -> str:
@@ -42,10 +44,8 @@ def test_fanout_skips_shuffle_when_scan_already_wide(spark, sf_dir,
     # a table whose size >= parallelism * maxPartitionBytes already
     # produces >= parallelism input splits → repartition must be a no-op
     par = spark.sparkContext.defaultParallelism
-    monkeypatch.setitem(
-        datapipe._PERSIST_SIZE_CACHE, (sf_dir, "documents.parquet"),
-        par * datapipe._max_split_bytes(spark) + 1,
-    )
+    big = par * datapipe._max_split_bytes(spark) + 1
+    monkeypatch.setattr(datapipe, "probe", lambda _p: ("t", big, False))
     docs = scan_parquet(spark, os.path.join(sf_dir, "documents.parquet"))
     out = _fanout(spark, docs, sf_dir)
     assert out is docs  # same immutable plan object — zero new Exchange
@@ -53,9 +53,8 @@ def test_fanout_skips_shuffle_when_scan_already_wide(spark, sf_dir,
 
 
 def test_fanout_skips_shuffle_on_remote_path(spark, sf_dir, monkeypatch):
-    # non-stat-able path → size None → production-scale branch (no shuffle)
-    monkeypatch.setitem(
-        datapipe._PERSIST_SIZE_CACHE, (sf_dir, "documents.parquet"), None)
+    # remote path → size None → production-scale branch (no shuffle)
+    monkeypatch.setattr(datapipe, "probe", lambda _p: (None, None, True))
     docs = scan_parquet(spark, os.path.join(sf_dir, "documents.parquet"))
     assert _fanout(spark, docs, sf_dir) is docs
 
@@ -65,17 +64,24 @@ def test_fanout_without_sf_dir_keeps_old_behavior(spark, sf_dir):
     assert "RoundRobinPartitioning" in _phys_plan(_fanout(spark, docs))
 
 
-def test_table_size_none_for_remote_and_missing_paths(tmp_path):
-    datapipe._PERSIST_SIZE_CACHE.clear()
+def test_table_size_none_for_remote_paths():
     assert _table_size_bytes("hdfs://nn:8020/warehouse",
                              "documents.parquet") is None
     assert _table_size_bytes("s3a://bucket/prefix",
                              "documents.parquet") is None
-    assert _table_size_bytes(str(tmp_path), "does_not_exist.parquet") is None
+    assert gs_session.probe("hdfs://nn:8020/warehouse") == (None, None, True)
+
+
+def test_table_size_raises_for_missing_local_path(tmp_path):
+    # a misspelled local sf_dir must fail loudly, not read as production
+    # scale (persist ON, fan-out OFF) the way a remote path does
+    with pytest.raises(FileNotFoundError):
+        _table_size_bytes(str(tmp_path), "does_not_exist.parquet")
+    with pytest.raises(FileNotFoundError):
+        _should_persist(str(tmp_path / "typo"))
 
 
 def test_should_persist_true_on_remote_storage():
-    datapipe._PERSIST_SIZE_CACHE.clear()
     # the r14 bug: OSError swallowed into size 0 → persist permanently
     # OFF exactly at the scale where it must be ON
     assert _should_persist("hdfs://nn:8020/warehouse") is True
@@ -83,12 +89,10 @@ def test_should_persist_true_on_remote_storage():
 
 
 def test_should_persist_size_threshold(tmp_path, monkeypatch):
-    datapipe._PERSIST_SIZE_CACHE.clear()
     p = tmp_path / "documents.parquet"
     p.write_bytes(b"x" * 128)
     monkeypatch.setattr(datapipe, "_PERSIST_MIN_BYTES", 64)
     assert _should_persist(str(tmp_path)) is True
-    datapipe._PERSIST_SIZE_CACHE.clear()
     monkeypatch.setattr(datapipe, "_PERSIST_MIN_BYTES", 1024)
     assert _should_persist(str(tmp_path)) is False
 
@@ -97,17 +101,24 @@ def test_scan_parquet_falls_back_unmemoized_on_stat_failure(
         spark, sf_dir, monkeypatch):
     path = os.path.join(sf_dir, "documents.parquet")
 
-    def boom(_p):
-        raise OSError("stat not supported on this filesystem")
-
-    monkeypatch.setattr(gs_session, "_path_version", boom)
-    before = dict(gs_session._SCAN_MEMO)
+    # a remote path has no token: plain scan, nothing memoized
+    monkeypatch.setattr(gs_session, "probe", lambda _p: (None, None, True))
+    before = dict(MEMO._entries)
     df = scan_parquet(spark, path)
     assert df.limit(1).count() == 1  # a working plain scan
-    # no memo entry was added for the un-stat-able path
-    assert gs_session._SCAN_MEMO == before
+    assert scan_parquet(spark, path) is not df
+    # no memo entry was added for the token-less path
+    assert MEMO._entries == before
 
 
 def test_max_split_bytes_parses_suffixed_values(spark):
-    assert datapipe._max_split_bytes(spark) == int(
-        spark.conf.get("spark.sql.files.maxPartitionBytes"))
+    key = "spark.sql.files.maxPartitionBytes"
+    assert datapipe._max_split_bytes(spark) == int(spark.conf.get(key))
+    prev = spark.conf.get(key)
+    try:
+        for raw, want in (("128m", 134217728), ("128mb", 134217728),
+                          ("1g", 1024 ** 3)):
+            spark.conf.set(key, raw)
+            assert datapipe._max_split_bytes(spark) == want, raw
+    finally:
+        spark.conf.set(key, prev)

@@ -274,43 +274,6 @@ def _session_results(spark, event_dir):
     return got
 
 
-def test_session_heuristics_transformwithstate_parity(spark, event_dir):
-    # transformWithState's Python↔JVM state protocol is protobuf-based;
-    # skip where the protobuf wheel isn't installed (this container).
-    pytest.importorskip("google.protobuf")
-    # the Spark-4 operator needs the RocksDB state store provider
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass",
-                          None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        jvm, fs, st, gc, fl = _stream_tables(spark, event_dir)
-        union = sessions.prepare_session_input(jvm, fs, st, gc, fl)
-        res = sessions.session_heuristics_tws(union, max_created_files=100)
-        q = (
-            res.writeStream.format("memory").queryName("sess_tws")
-            .outputMode("append").trigger(availableNow=True).start()
-        )
-        q.awaitTermination()
-        got = {
-            (r.application_id, r.attempt_id, r.heuristic):
-                (r.severity, json.loads(r.details_json))
-            for r in spark.sql("SELECT * FROM sess_tws").collect()
-        }
-        assert got
-        exp = _batch_expected(spark, event_dir, ALL_HEURISTICS)
-        assert got == exp
-    finally:
-        if prev is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev)
-
-
 def test_session_state_survives_micro_batches(spark, event_dir):
     # one file per trigger ⇒ state must carry across many micro-batches
     jvm, fs, st, gc, fl = _stream_tables(spark, event_dir, max_files=1)
