@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 
 from garmadon_spark import filters as gf
 from garmadon_spark.operators import sketch
-from garmadon_spark.session import load_table
+from garmadon_spark.session import load_table, materialize
 
 
 def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1197,38 +1197,28 @@ def _ensure_freq_summary(spark, sf_dir):
     """Materialize the maintained summary once per corpus: the value
     buckets written as a 3-file stream source, drained through
     maintain_freq_items_stream (availableNow) into the on-disk k-row
-    summary.  Stamp-keyed on the events table's file state, like every
-    other index fixture."""
-    import os
-    import shutil
-
-    from garmadon_spark.queries.datapipe import _index_cache_path
+    summary.  Keyed on the events table's file state, like every other
+    index fixture."""
     from garmadon_spark.streaming.sketch import (
         maintain_freq_items_stream,
     )
 
-    base = _index_cache_path(sf_dir, "events.parquet",
-                             "garmadon_freqsum_")
-    stamp = os.path.join(base, "_OK")
-    want = f"k={_FREQ_K};w={_FREQ_BUCKET_WIDTH}"
-    stamped = open(stamp).read() if os.path.exists(stamp) else None
-    if stamped != want:
-        shutil.rmtree(base, ignore_errors=True)
+    def build(base):
         src = f"{base}/src"
         # 3 source files -> 3 micro-batches with maxFilesPerTrigger=1:
         # the summary is genuinely FOLDED across triggers, not built in
         # one batch
         _value_buckets(spark, sf_dir).repartition(3) \
             .write.mode("overwrite").parquet(src)
-        q = maintain_freq_items_stream(
+        maintain_freq_items_stream(
             spark.readStream.schema("bucket int")
             .option("maxFilesPerTrigger", "1").parquet(src),
             f"{base}/out", f"{base}/ckpt",
             item_col="bucket", k=_FREQ_K,
-        ).start()
-        q.awaitTermination()
-        with open(stamp, "w") as fh:
-            fh.write(want)
+        ).start().awaitTermination()
+
+    base = materialize(sf_dir, "events.parquet", "garmadon_freqsum_",
+                       f"k={_FREQ_K};w={_FREQ_BUCKET_WIDTH}", build)
     return f"{base}/out"
 
 

@@ -24,7 +24,9 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from garmadon_spark.operators import corpus, dedup, similarity, text
-from garmadon_spark.session import MEMO, RESULT, SESSION, load_table, probe
+from garmadon_spark.session import (
+    MEMO, RESULT, SESSION, fixture_path, load_table, materialize, probe,
+)
 from garmadon_spark.session import scan_parquet as _scan
 
 
@@ -261,39 +263,21 @@ WHERE NOT EXISTS (
 """
 
 
-def _hash_index_path(sf_dir: str) -> str:
-    return _index_cache_path(sf_dir, "documents.parquet",
-                             "garmadon_hashidx_")
-
-
 def _ensure_hash_index(spark, sf_dir):
     """Materialize the hp-prefix-partitioned exact-dedup hash index
     (dedup.write_hash_index layout) once per corpus: the historical
     docs' normalized content hashes under ``index/hp=XX`` — what a
     deployment appends to after every accepted batch.  Stamp-keyed on
     the prefix width so a HASH_HP_CHARS change rebuilds."""
-    import os
-    import shutil
+    def build(base):
+        hist = _docs(spark, sf_dir).filter(F.col("doc_id") % 5 != 0).select(
+            dedup.content_hash("text").alias("content_hash")
+        ).distinct()
+        dedup.write_hash_index(hist, f"{base}/index", mode="overwrite")
 
-    base = _hash_index_path(sf_dir)
-    stamp = os.path.join(base, "_OK")
-    want = f"hp={dedup.HASH_HP_CHARS};v=2"  # v2: _LAYOUT-stamped tree
-    if os.path.exists(stamp) and open(stamp).read() == want:
-        return base
-    shutil.rmtree(base, ignore_errors=True)
-    hist = _docs(spark, sf_dir).filter(F.col("doc_id") % 5 != 0).select(
-        dedup.content_hash("text").alias("content_hash")
-    ).distinct()
-    dedup.write_hash_index(hist, os.path.join(base, "index"),
-                           mode="overwrite")
-    with open(stamp, "w") as fh:
-        fh.write(want)
-    return base
-
-
-def _minhash_pruned_index_path(sf_dir: str) -> str:
-    return _index_cache_path(sf_dir, "documents.parquet",
-                             "garmadon_mhidx_")
+    # v2: _LAYOUT-stamped tree
+    return materialize(sf_dir, "documents.parquet", "garmadon_hashidx_",
+                       f"hp={dedup.HASH_HP_CHARS};v=2", build)
 
 
 def _ensure_minhash_pruned_index(spark, sf_dir):
@@ -303,42 +287,33 @@ def _ensure_minhash_pruned_index(spark, sf_dir):
     point-lookup axis) and its banded twin (``bands/band=B/bp=P`` —
     the candidate join's partition-pruned axis), both from the SAME
     rows the unpruned query reads."""
-    import os
-    import shutil
+    def build(base):
+        index = _scan(spark, _ensure_sig_index(spark, sf_dir))
+        # one-shot full-tree build is a FIXTURE artifact (a deployment
+        # appends per accepted batch and never pays it): the 32×256-leaf
+        # banded write is bounded by file-commit overhead, so spread it
+        # over 256 writer tasks and commit task-side (v2) — the _OK
+        # stamp is the crash guard here, not the committer
+        hc = spark.sparkContext._jsc.hadoopConfiguration()
+        key = "mapreduce.fileoutputcommitter.algorithm.version"
+        old = hc.get(key)
+        hc.set(key, "2")
+        try:
+            index.withColumn("dp", dedup.doc_prefix("doc")) \
+                .repartition("dp").write.mode("overwrite") \
+                .partitionBy("dp").parquet(f"{base}/sigs")
+            dedup.banded_signatures(index, 32, 2) \
+                .repartition(256, "band", "bp").write.mode("overwrite") \
+                .partitionBy("band", "bp").parquet(f"{base}/bands")
+        finally:
+            if old is not None:
+                hc.set(key, old)
+            else:
+                hc.unset(key)
 
-    base = _minhash_pruned_index_path(sf_dir)
-    stamp = os.path.join(base, "_OK")
-    want = (f"v=1;h=64;b=32;dp={dedup.SIG_DP_CHARS};"
-            f"bp={dedup.SIG_BP_CHARS}")
-    if os.path.exists(stamp) and open(stamp).read() == want:
-        return base
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base, exist_ok=True)
-    index = _scan(spark, _ensure_sig_index(spark, sf_dir))
-    # one-shot full-tree build is a FIXTURE artifact (a deployment
-    # appends per accepted batch and never pays it): the 32×256-leaf
-    # banded write is bounded by file-commit overhead, so spread it
-    # over 256 writer tasks and commit task-side (v2) — the _OK stamp
-    # is the crash guard here, not the committer
-    hc = spark.sparkContext._jsc.hadoopConfiguration()
-    key = "mapreduce.fileoutputcommitter.algorithm.version"
-    old = hc.get(key)
-    hc.set(key, "2")
-    try:
-        index.withColumn("dp", dedup.doc_prefix("doc")) \
-            .repartition("dp").write.mode("overwrite") \
-            .partitionBy("dp").parquet(f"{base}/sigs")
-        dedup.banded_signatures(index, 32, 2) \
-            .repartition(256, "band", "bp").write.mode("overwrite") \
-            .partitionBy("band", "bp").parquet(f"{base}/bands")
-    finally:
-        if old is not None:
-            hc.set(key, old)
-        else:
-            hc.unset(key)
-    with open(stamp, "w") as fh:
-        fh.write(want)
-    return base
+    return materialize(sf_dir, "documents.parquet", "garmadon_mhidx_",
+                       f"v=1;h=64;b=32;dp={dedup.SIG_DP_CHARS};"
+                       f"bp={dedup.SIG_BP_CHARS}", build)
 
 
 _MINHASH_PRUNED_COPIES = 10
@@ -476,34 +451,18 @@ _SIMHASH_INC_COPIES = 10          # engineered re-scrapes in the increment
 _SIMHASH_INC_OFFSET = 10**12      # re-scrapes arrive under new ids
 
 
-def _simhash_index_path(sf_dir: str) -> str:
-    return _index_cache_path(sf_dir, "documents.parquet",
-                             "garmadon_shidx_")
-
-
 def _ensure_simhash_index(spark, sf_dir):
     """Materialize the chunk-partitioned SimHash index
     (dedup.write_simhash_index layout) once per corpus: the historical
     docs' fingerprints under ``index/chunk=C/cp=XX`` — what a
     deployment appends to after every accepted batch."""
-    import os
-    import shutil
+    def build(base):
+        hist = _docs(spark, sf_dir).filter(F.col("doc_id") % 5 != 0)
+        dedup.write_simhash_index(dedup.simhash(hist), f"{base}/index",
+                                  mode="overwrite")
 
-    base = _simhash_index_path(sf_dir)
-    stamp = os.path.join(base, "_OK")
-    want = f"v=1;{dedup._simhash_layout(14, 4)}"
-    if os.path.exists(stamp) and open(stamp).read() == want:
-        return base
-    shutil.rmtree(base, ignore_errors=True)
-    os.makedirs(base, exist_ok=True)
-    hist = _docs(spark, sf_dir).filter(F.col("doc_id") % 5 != 0)
-    dedup.write_simhash_index(
-        dedup.simhash(hist), os.path.join(base, "index"),
-        mode="overwrite",
-    )
-    with open(stamp, "w") as fh:
-        fh.write(want)
-    return base
+    return materialize(sf_dir, "documents.parquet", "garmadon_shidx_",
+                       f"v=1;{dedup._simhash_layout(14, 4)}", build)
 
 
 def _simhash_increment(spark, sf_dir):
@@ -1068,18 +1027,15 @@ def _ensure_sig_index(spark, sf_dir) -> str:
     job only sketches the increment).  Keyed on the DOCUMENTS file's
     identity (the table it derives from) so a regenerated corpus
     rebuilds the index."""
-    import os
-
-    path = _index_cache_path(sf_dir, "documents.parquet",
-                             "garmadon_sigidx_")
-    if not os.path.exists(os.path.join(path, "_OK")):
+    def build(path):
         docs = _fanout(spark, _docs(spark, sf_dir), sf_dir)
         hist = docs.filter(F.col("doc_id") % 5 != 0)
         dedup.minhash_signatures(hist, n=2, num_hashes=64).write.mode(
             "overwrite"
         ).parquet(path)
-        open(os.path.join(path, "_OK"), "w").close()
-    return path
+
+    return materialize(sf_dir, "documents.parquet", "garmadon_sigidx_",
+                       "v=1;n=2;h=64", build)
 
 
 def doc_minhash_incremental(spark, sf_dir):
@@ -2225,29 +2181,10 @@ SELECT vec_id, sem_group, (rn = 1) AS keep FROM ranked
 """
 
 
-def _index_cache_path(sf_dir: str, source_file: str, prefix: str) -> str:
-    """Deterministic per-corpus cache location for a materialized index,
-    keyed by the SOURCE table's path and probe token so a regenerated
-    corpus rebuilds — the index must be keyed on the table it derives
-    from (sig index ↔ documents, IVF ↔ embeddings), not a sibling."""
-    import hashlib
-    import tempfile
-
-    token = probe(os.path.join(sf_dir, source_file))[0]
-    key = f"{os.path.join(os.path.realpath(sf_dir), source_file)}:{token}"
-    h = hashlib.sha1(key.encode()).hexdigest()[:16]
-    return os.path.join(tempfile.gettempdir(), f"{prefix}{h}")
-
-
-def _ivf_index_path(sf_dir: str) -> str:
-    return _index_cache_path(sf_dir, "embeddings.parquet", "garmadon_ivf_")
-
-
 def _emb_token(sf_dir: str):
     """The embeddings table's probe token: part of every embeddings-
-    derived memo entry and index stamp, so a corpus REWRITTEN at the
-    same path (even at the same row count) rebuilds instead of serving
-    the stale layout."""
+    derived memo entry, so a corpus REWRITTEN at the same path (even at
+    the same row count) rebuilds instead of serving a stale model."""
     return probe(os.path.join(sf_dir, "embeddings.parquet"))[0]
 
 
@@ -2291,25 +2228,13 @@ def _ensure_ivf_index(spark, sf_dir) -> str:
     semantics); return its path.  The _OK stamp records the build
     params — a corpus whose size moves it to a different centroid
     count rebuilds instead of serving the stale layout."""
-    import os
-
-    path = _ivf_index_path(sf_dir)
-    n = _emb_count(spark, sf_dir)
-    k = _ivf_cells_for(n)
+    k = _ivf_cells_for(_emb_count(spark, sf_dir))
     mode = "h2" if k > similarity.HIER_IVF_MIN_CELLS else "flat"
-    # the file-state signature is part of the stamp: a corpus REWRITTEN
-    # at the same path with the same row count (so the same k) must
-    # rebuild, not serve the old corpus's vectors/centroids
-    want = f"k={k};{mode};sig={_emb_token(sf_dir)}"
-    stamp = os.path.join(path, "_OK")
-    stamped = open(stamp).read() if os.path.exists(stamp) else None
-    if stamped != want:
-        similarity.write_ivf_index(
-            _embs(spark, sf_dir), path, n_centroids=k, iterations=1,
-        )
-        with open(stamp, "w") as fh:
-            fh.write(want)
-    return path
+    return materialize(
+        sf_dir, "embeddings.parquet", "garmadon_ivf_", f"k={k};{mode}",
+        lambda path: similarity.write_ivf_index(
+            _embs(spark, sf_dir), path, n_centroids=k, iterations=1),
+    )
 
 
 def emb_ann_ivf(spark, sf_dir, query_vec_id: int = 0, k: int = 10):
@@ -3296,65 +3221,58 @@ _RECALL_FLOOR_BASE = 0.6
 _RECALL_FLOOR_DRIFTED = 0.5
 
 
-def _drift_index_path(sf_dir: str) -> str:
-    return _index_cache_path(sf_dir, "embeddings.parquet",
-                             "garmadon_ivfdrift_")
-
-
-def _retrain_index_path(sf_dir: str) -> str:
-    return _index_cache_path(sf_dir, "embeddings.parquet",
-                             "garmadon_ivfretrain_")
-
-
 def _ensure_drift_index(spark, sf_dir):
     """Materialize the drifted-index fixture once per corpus: an index
     trained on the ORIGINAL corpus absorbs (centroids fixed) a
     sign-flipped replica with ids offset by n.  Returns (path, n)."""
-    import os
-
     n = _emb_count(spark, sf_dir)
     k = _ivf_cells_for(n)
-    path = _drift_index_path(sf_dir)
-    want = f"k={k};sig={_emb_token(sf_dir)}"
-    stamp = os.path.join(path, "_OK")
-    stamped = open(stamp).read() if os.path.exists(stamp) else None
-    if stamped != want:
+
+    def build(path):
         embs = _embs(spark, sf_dir)
         similarity.write_ivf_index(embs, path, n_centroids=k,
                                    iterations=1)
-        drifted = embs.select(
-            (F.col("vec_id") + n).alias("vec_id"),
-            F.transform("embedding", lambda x: -x).alias("embedding"),
-            "label",
-        )
-        similarity.append_to_ivf_index(drifted, path)
-        with open(stamp, "w") as fh:
-            fh.write(want)
-    return path, n
+        similarity.append_to_ivf_index(_sign_flipped(embs, n), path)
+
+    return materialize(sf_dir, "embeddings.parquet", "garmadon_ivfdrift_",
+                       f"k={k}", build), n
 
 
 def _ensure_retrained_index(spark, sf_dir):
     """Blue/green: COPY the drifted index and re-train the copy with
     the corpus-scaled cell count (the drift index's recall queries keep
     reading the untouched original).  Returns (path, n, new_cells)."""
-    import os
-    import shutil
-
     dpath, n = _ensure_drift_index(spark, sf_dir)
     k2 = _ivf_cells_for(2 * n)
-    path = _retrain_index_path(sf_dir)
-    want = f"k={k2};sig={_emb_token(sf_dir)}"
-    stamp = os.path.join(path, "_OK")
-    stamped = open(stamp).read() if os.path.exists(stamp) else None
-    if stamped != want:
-        shutil.rmtree(path, ignore_errors=True)
-        shutil.copytree(dpath, path)
-        os.remove(os.path.join(path, "_OK"))  # the copy isn't the drift index
+
+    def build(path):
+        _copy_unstamped(dpath, path)
         similarity.retrain_ivf_index(spark, path, n_centroids=k2,
                                      iterations=1)
-        with open(stamp, "w") as fh:
-            fh.write(want)
-    return path, n, k2
+
+    return materialize(sf_dir, "embeddings.parquet", "garmadon_ivfretrain_",
+                       f"k={k2}", build), n, k2
+
+
+def _sign_flipped(embs, n):
+    """The drift fixtures' replica: every vector negated, ids offset by
+    ``n``."""
+    return embs.select(
+        (F.col("vec_id") + n).alias("vec_id"),
+        F.transform("embedding", lambda x: -x).alias("embedding"),
+        "label",
+    )
+
+
+def _copy_unstamped(src, dst):
+    """Blue/green copy of a finished index WITHOUT its ``_OK``: at
+    fixture sizes the source's stamp can equal the copy's (both cell
+    counts floor at 8), so an inherited stamp would make a retrain that
+    crashed look complete."""
+    import shutil
+
+    shutil.copytree(src, dst, dirs_exist_ok=True,
+                    ignore=shutil.ignore_patterns("_OK"))
 
 
 def _recall_df(spark, path, n_base, stage):
@@ -3650,11 +3568,6 @@ FROM pv
 """
 
 
-def _bigram_model_path(sf_dir: str) -> str:
-    return _index_cache_path(sf_dir, "documents.parquet",
-                             "garmadon_bigramlm_")
-
-
 def doc_perplexity_model(spark, sf_dir):
     """The cross-corpus CCNet shape doc_perplexity only simulates:
     train the bigram LM ONCE on the English reference slice
@@ -3666,13 +3579,11 @@ def doc_perplexity_model(spark, sf_dir):
     is exact (unpruned) here so the DuckDB oracle replicates it
     bit-for-bit; the 100 TB deployment prunes to top-K and broadcasts
     (train_bigram_lm(top_k=...), broadcast_model=True)."""
-    import os
-
     docs = _fanout(spark, _docs(spark, sf_dir), sf_dir)
-    path = _bigram_model_path(sf_dir)
-    if not os.path.exists(os.path.join(path, "_OK")):
-        text.train_bigram_lm(docs.filter(F.col("lang") == "en"), path)
-        open(os.path.join(path, "_OK"), "w").close()
+    path = materialize(
+        sf_dir, "documents.parquet", "garmadon_bigramlm_", "v=1;lang=en",
+        lambda p: text.train_bigram_lm(docs.filter(F.col("lang") == "en"), p),
+    )
     return text.perplexity_from_model(docs, path)
 
 
@@ -3861,74 +3772,51 @@ def _ivfpq_quantizer(spark, path):
                      lambda: similarity.load_ivfpq_quantizer(spark, path))
 
 
-def _ivfpq_drift_path(sf_dir: str) -> str:
-    return _index_cache_path(sf_dir, "embeddings.parquet",
-                             "garmadon_ivfpqdrift_")
-
-
-def _ivfpq_retrain_path(sf_dir: str) -> str:
-    return _index_cache_path(sf_dir, "embeddings.parquet",
-                             "garmadon_ivfpqretrain_")
-
-
 def _ensure_ivfpq_drift_index(spark, sf_dir):
     """The persisted-IVF-PQ drift fixture: an OPQ-rotated index built
     from the ORIGINAL corpus absorbs (all quantizers frozen) the
     sign-flipped replica — vectors AND codes trees."""
-    import os
-
     n = _emb_count(spark, sf_dir)
     k = _ivf_cells_for(n)
-    path = _ivfpq_drift_path(sf_dir)
-    # the stamp records every build param the fixture depends on —
-    # changing _PQ_M/_PQ_KSUB/the fit iteration constants must rebuild,
-    # not silently serve an index built with the old quantizer shape
-    want = (f"k={k};m={_PQ_M};ks={_PQ_KSUB};pi={_PQ_FIT_ITERS};"
-            f"oi={_OPQ_FIT_ITERS};sig={_emb_token(sf_dir)}")
-    stamp = os.path.join(path, "_OK")
-    stamped = open(stamp).read() if os.path.exists(stamp) else None
-    if stamped != want:
+
+    def build(path):
         embs = _embs(spark, sf_dir)
         similarity.write_ivfpq_index(
             embs, path, n_centroids=k, m=_PQ_M, ksub=_PQ_KSUB,
             iterations=1, pq_iterations=_PQ_FIT_ITERS, opq=True,
             opq_iterations=_OPQ_FIT_ITERS,
         )
-        drifted = embs.select(
-            (F.col("vec_id") + n).alias("vec_id"),
-            F.transform("embedding", lambda x: -x).alias("embedding"),
-            "label",
-        )
-        similarity.append_to_ivfpq_index(drifted, path)
-        with open(stamp, "w") as fh:
-            fh.write(want)
-    return path, n
+        similarity.append_to_ivfpq_index(_sign_flipped(embs, n), path)
+
+    return materialize(sf_dir, "embeddings.parquet", "garmadon_ivfpqdrift_",
+                       _ivfpq_want(k), build), n
+
+
+def _ivfpq_want(k):
+    """An IVF-PQ fixture's stamp: every build param it depends on, so
+    changing _PQ_M/_PQ_KSUB/the fit iteration constants rebuilds
+    instead of silently serving an index built with the old quantizer
+    shape."""
+    return (f"k={k};m={_PQ_M};ks={_PQ_KSUB};pi={_PQ_FIT_ITERS};"
+            f"oi={_OPQ_FIT_ITERS}")
 
 
 def _ensure_ivfpq_retrained_index(spark, sf_dir):
     """Blue/green: COPY the drifted IVF-PQ index and re-train the copy
     — coarse cells at the corpus-scaled count, rotation recomposed,
     codebooks refit from post-drift residuals."""
-    import os
-    import shutil
-
     dpath, n = _ensure_ivfpq_drift_index(spark, sf_dir)
     k2 = _ivf_cells_for(2 * n)
-    path = _ivfpq_retrain_path(sf_dir)
-    want = (f"k={k2};m={_PQ_M};ks={_PQ_KSUB};pi={_PQ_FIT_ITERS};"
-            f"oi={_OPQ_FIT_ITERS};sig={_emb_token(sf_dir)}")
-    stamp = os.path.join(path, "_OK")
-    stamped = open(stamp).read() if os.path.exists(stamp) else None
-    if stamped != want:
-        shutil.rmtree(path, ignore_errors=True)
-        shutil.copytree(dpath, path)
-        os.remove(os.path.join(path, "_OK"))
+
+    def build(path):
+        _copy_unstamped(dpath, path)
         similarity.retrain_ivfpq_index(
             spark, path, n_centroids=k2, iterations=1,
             pq_iterations=_PQ_FIT_ITERS, opq_iterations=_OPQ_FIT_ITERS,
         )
-        with open(stamp, "w") as fh:
-            fh.write(want)
+
+    path = materialize(sf_dir, "embeddings.parquet",
+                       "garmadon_ivfpqretrain_", _ivfpq_want(k2), build)
     return path, n, k2
 
 
@@ -4098,30 +3986,22 @@ def _ensure_report_state(spark, sf_dir):
     the documents table split into 3 stream files and drained through
     corpus.corpus_report_stream — the state is genuinely FOLDED from
     increments with the run-scoped marker protocol, never built in one
-    scan.  Stamp-keyed on the documents table's file state."""
-    import os
-    import shutil
-
-    base = _index_cache_path(sf_dir, "documents.parquet",
-                             "garmadon_reportincr_")
-    stamp = os.path.join(base, "_STAMP")
-    want = f"bin={corpus.REPORT_CHAR_BIN};lgk={corpus.REPORT_HLL_LG_K}"
-    stamped = open(stamp).read() if os.path.exists(stamp) else None
-    if stamped != want:
-        shutil.rmtree(base, ignore_errors=True)
+    scan."""
+    def build(base):
         docs = _docs(spark, sf_dir)
         src = f"{base}/src"
         for i in range(3):
             docs.filter(F.col("doc_id") % 3 == i).coalesce(1) \
                 .write.mode("append").parquet(src)
-        q = corpus.corpus_report_stream(
+        corpus.corpus_report_stream(
             spark.readStream.schema(docs.schema)
             .option("maxFilesPerTrigger", "1").parquet(src),
             f"{base}/state", f"{base}/ckpt",
-        ).start()
-        q.awaitTermination()
-        with open(stamp, "w") as fh:
-            fh.write(want)
+        ).start().awaitTermination()
+
+    base = materialize(
+        sf_dir, "documents.parquet", "garmadon_reportincr_",
+        f"bin={corpus.REPORT_CHAR_BIN};lgk={corpus.REPORT_HLL_LG_K}", build)
     return f"{base}/state"
 
 
@@ -4226,11 +4106,6 @@ FROM documents GROUP BY 1, 2
 _SERVE_QUERIES = 8   # corpus queries through the loop, 2 micro-batches
 
 
-def _ivfpq_serve_path(sf_dir: str) -> str:
-    return _index_cache_path(sf_dir, "embeddings.parquet",
-                             "garmadon_ivfpqserve_")
-
-
 def _ensure_ivfpq_served(spark, sf_dir):
     """Materialize serve_ivfpq_stream's results once per corpus: the
     first _SERVE_QUERIES corpus vectors written as TWO source files and
@@ -4239,12 +4114,9 @@ def _ensure_ivfpq_served(spark, sf_dir):
     mechanics exercised) — against the IVF-PQ drift fixture at the
     serving-contract widths (nprobe = _serving_nprobe(cells), rerank
     _IVFPQ_RERANK·k).  The stamp embeds the INDEX fixture's stamp, so
-    an index rebuild (new corpus signature or quantizer shape)
-    invalidates the served results too.  Returns
+    an index rebuilt at another quantizer shape invalidates the served
+    results too.  Returns
     (out_dir, index_path, queries_df, nprobe)."""
-    import os
-    import shutil
-
     from garmadon_spark.streaming import ann as _ann_stream
 
     ipath, _n = _ensure_ivfpq_drift_index(spark, sf_dir)
@@ -4253,30 +4125,26 @@ def _ensure_ivfpq_served(spark, sf_dir):
     # the index stamp (guide §1.2)
     cells = len(_ivfpq_quantizer(spark, ipath)[0])
     nprobe = _serving_nprobe(cells)
-    base = _ivfpq_serve_path(sf_dir)
-    stamp = os.path.join(base, "_OK")
     with open(os.path.join(ipath, "_OK")) as fh:
         idx_stamp = fh.read()
-    want = (f"q={_SERVE_QUERIES};k={_RECALL_K};np={nprobe};"
-            f"rr={_IVFPQ_RERANK};idx[{idx_stamp}]")
-    stamped = open(stamp).read() if os.path.exists(stamp) else None
     queries = _embs(spark, sf_dir).filter(
         F.col("vec_id") < _SERVE_QUERIES
     ).select(F.col("vec_id").alias("query_id"), "embedding")
-    if stamped != want:
-        shutil.rmtree(base, ignore_errors=True)
+
+    def build(base):
         src = f"{base}/src"
         queries.repartition(2).write.mode("overwrite").parquet(src)
-        q = _ann_stream.serve_ivfpq_stream(
+        _ann_stream.serve_ivfpq_stream(
             spark.readStream.schema(_scan(spark, src).schema)
             .option("maxFilesPerTrigger", "1").parquet(src),
             ipath, f"{base}/out", f"{base}/ckpt",
             k=_RECALL_K, nprobe=nprobe,
             rerank=_IVFPQ_RERANK * _RECALL_K, exclude_self=True,
-        ).start()
-        q.awaitTermination()
-        with open(stamp, "w") as fh:
-            fh.write(want)
+        ).start().awaitTermination()
+
+    base = materialize(sf_dir, "embeddings.parquet", "garmadon_ivfpqserve_",
+                       f"q={_SERVE_QUERIES};k={_RECALL_K};np={nprobe};"
+                       f"rr={_IVFPQ_RERANK};idx[{idx_stamp}]", build)
     return f"{base}/out", ipath, queries, nprobe
 
 
@@ -4380,11 +4248,6 @@ _ADMIT_COPIES = 20      # batch-2 re-scrapes of batch-1's tail
 _ADMIT_ID_OFFSET = 100000   # re-scraped copies arrive under new ids
 
 
-def _admit_path(sf_dir: str) -> str:
-    return _index_cache_path(sf_dir, "documents.parquet",
-                             "garmadon_admit_")
-
-
 def _admit_batches(spark, sf_dir):
     """The two engineered admission increments.  Batch 2's copies are
     batch-1 docs re-keyed (+_ADMIT_ID_OFFSET) — identical text under a
@@ -4409,20 +4272,28 @@ def _ensure_admitted(spark, sf_dir):
     with maxFilesPerTrigger=1 — two genuine micro-batches, arrival
     order pinned by explicit distinct mtimes (the file source orders by
     modification time).  Returns the fixture root."""
-    import glob
-    import os
-    import shutil
-
     from garmadon_spark.streaming import corpus as _scorpus
 
-    base = _admit_path(sf_dir)
-    stamp = os.path.join(base, "_OK")
-    want = (f"b1={_ADMIT_B1};f={_ADMIT_FRESH};c={_ADMIT_COPIES};"
-            f"off={_ADMIT_ID_OFFSET};v=3")  # v3: dp-partitioned sigs
-    if os.path.exists(stamp) and open(stamp).read() == want:
-        return base
-    shutil.rmtree(base, ignore_errors=True)
-    b1, b2 = _admit_batches(spark, sf_dir)
+    # v3: dp-partitioned sigs
+    return materialize(
+        sf_dir, "documents.parquet", "garmadon_admit_",
+        f"b1={_ADMIT_B1};f={_ADMIT_FRESH};c={_ADMIT_COPIES};"
+        f"off={_ADMIT_ID_OFFSET};v=3",
+        lambda base: _drain_increments(
+            base, *_admit_batches(spark, sf_dir),
+            _scorpus.dedup_corpus_stream),
+    )
+
+
+def _drain_increments(base, b1, b2, stream, **kw):
+    """Drain two increments through a streaming gate as two genuine
+    micro-batches: each written as ONE file under ``base/src``, arrival
+    order pinned by explicit distinct mtimes (the file source orders by
+    modification time), read availableNow with maxFilesPerTrigger=1.
+    ``stream(source, index, out, ckpt, **kw)`` returns the unstarted
+    writer over ``base/{index,out,ckpt}``; returns when the drain ends."""
+    import glob
+
     src = f"{base}/src"
     b1.coalesce(1).write.mode("append").parquet(src)
     first = set(glob.glob(f"{src}/part-*.parquet"))
@@ -4430,15 +4301,11 @@ def _ensure_admitted(spark, sf_dir):
     second = sorted(set(glob.glob(f"{src}/part-*.parquet")) - first)
     for i, f in enumerate(sorted(first) + second):
         os.utime(f, (1_000_000_000 + i, 1_000_000_000 + i))
-    q = _scorpus.dedup_corpus_stream(
-        spark.readStream.schema(b1.schema)
+    stream(
+        b1.sparkSession.readStream.schema(b1.schema)
         .option("maxFilesPerTrigger", "1").parquet(src),
-        f"{base}/index", f"{base}/out", f"{base}/ckpt",
-    ).start()
-    q.awaitTermination()
-    with open(stamp, "w") as fh:
-        fh.write(want)
-    return base
+        f"{base}/index", f"{base}/out", f"{base}/ckpt", **kw,
+    ).start().awaitTermination()
 
 
 def doc_dedup_stream(spark, sf_dir):
@@ -4656,11 +4523,6 @@ _EADMIT_TAU = 0.9999
 _EADMIT_CELLS = 8
 
 
-def _eadmit_path(sf_dir: str) -> str:
-    return _index_cache_path(sf_dir, "embeddings.parquet",
-                             "garmadon_eadmit_")
-
-
 def _eadmit_batches(spark, sf_dir):
     """Two engineered embedding increments: fresh vectors plus exact
     re-keyed copies — one semantic re-scrape of the SEED corpus
@@ -4691,45 +4553,23 @@ def _ensure_eadmitted(spark, sf_dir):
     BOUNDED id range [100, 500) (constant work at every sf — the gate's
     cost is the serving path, not the corpus), two micro-batches with
     pinned arrival order, nprobe = all cells (exact gate)."""
-    import glob
-    import os
-    import shutil
-
     from garmadon_spark.streaming import ann as _ann_stream
 
-    base = _eadmit_path(sf_dir)
-    stamp = os.path.join(base, "_OK")
-    want = (f"seed={_EADMIT_SEED_LO}-{_EADMIT_SEED_HI};"
-            f"b={_EADMIT_B1}/{_EADMIT_B2};tau={_EADMIT_TAU};"
-            f"c={_EADMIT_CELLS};resub={_EADMIT_RESUB};"
-            f"sig={_emb_token(sf_dir)}")
-    if os.path.exists(stamp) and open(stamp).read() == want:
-        return base
-    shutil.rmtree(base, ignore_errors=True)
-    seed = _embs(spark, sf_dir).select("vec_id", "embedding").filter(
-        (F.col("vec_id") >= _EADMIT_SEED_LO)
-        & (F.col("vec_id") < _EADMIT_SEED_HI)
-    )
-    similarity.write_ivf_index(seed, f"{base}/index",
-                               n_centroids=_EADMIT_CELLS, iterations=1)
-    b1, b2 = _eadmit_batches(spark, sf_dir)
-    src = f"{base}/src"
-    b1.coalesce(1).write.mode("append").parquet(src)
-    first = set(glob.glob(f"{src}/part-*.parquet"))
-    b2.coalesce(1).write.mode("append").parquet(src)
-    second = sorted(set(glob.glob(f"{src}/part-*.parquet")) - first)
-    for i, f in enumerate(sorted(first) + second):
-        os.utime(f, (1_000_000_000 + i, 1_000_000_000 + i))
-    q = _ann_stream.admit_embeddings_stream(
-        spark.readStream.schema(b1.schema)
-        .option("maxFilesPerTrigger", "1").parquet(src),
-        f"{base}/index", f"{base}/out", f"{base}/ckpt",
-        tau=_EADMIT_TAU, nprobe=_EADMIT_CELLS,
-    ).start()
-    q.awaitTermination()
-    with open(stamp, "w") as fh:
-        fh.write(want)
-    return base
+    def build(base):
+        seed = _embs(spark, sf_dir).select("vec_id", "embedding").filter(
+            (F.col("vec_id") >= _EADMIT_SEED_LO)
+            & (F.col("vec_id") < _EADMIT_SEED_HI)
+        )
+        similarity.write_ivf_index(seed, f"{base}/index",
+                                   n_centroids=_EADMIT_CELLS, iterations=1)
+        _drain_increments(base, *_eadmit_batches(spark, sf_dir),
+                          _ann_stream.admit_embeddings_stream,
+                          tau=_EADMIT_TAU, nprobe=_EADMIT_CELLS)
+
+    return materialize(sf_dir, "embeddings.parquet", "garmadon_eadmit_",
+                       f"seed={_EADMIT_SEED_LO}-{_EADMIT_SEED_HI};"
+                       f"b={_EADMIT_B1}/{_EADMIT_B2};tau={_EADMIT_TAU};"
+                       f"c={_EADMIT_CELLS};resub={_EADMIT_RESUB}", build)
 
 
 def emb_admit_stream(spark, sf_dir):
@@ -5380,11 +5220,6 @@ _EXACT_COPIES = 20       # batch-2 re-scrapes of batch-1's tail
 _EXACT_OFF = 1_000_000   # re-scraped copies arrive under new ids
 
 
-def _exact_stream_path(sf_dir: str) -> str:
-    return _index_cache_path(sf_dir, "documents.parquet",
-                             "garmadon_exstr_")
-
-
 def _exact_stream_batches(spark, sf_dir):
     """The two engineered exact-gate increments.  Batch 2's copies are
     batch-1 docs re-keyed (+_EXACT_OFF) — identical text under a new
@@ -5411,36 +5246,16 @@ def _ensure_exact_streamed(spark, sf_dir):
     written as one file each and drained availableNow with
     maxFilesPerTrigger=1 — two genuine micro-batches, arrival order
     pinned by explicit distinct mtimes."""
-    import glob
-    import os
-    import shutil
-
     from garmadon_spark.streaming import corpus as _scorpus
 
-    base = _exact_stream_path(sf_dir)
-    stamp = os.path.join(base, "_OK")
-    want = (f"b1={_EXACT_B1};f={_EXACT_FRESH};c={_EXACT_COPIES};"
-            f"off={_EXACT_OFF};hp={dedup.HASH_HP_CHARS};v=1")
-    if os.path.exists(stamp) and open(stamp).read() == want:
-        return base
-    shutil.rmtree(base, ignore_errors=True)
-    b1, b2 = _exact_stream_batches(spark, sf_dir)
-    src = f"{base}/src"
-    b1.coalesce(1).write.mode("append").parquet(src)
-    first = set(glob.glob(f"{src}/part-*.parquet"))
-    b2.coalesce(1).write.mode("append").parquet(src)
-    second = sorted(set(glob.glob(f"{src}/part-*.parquet")) - first)
-    for i, f in enumerate(sorted(first) + second):
-        os.utime(f, (1_000_000_000 + i, 1_000_000_000 + i))
-    q = _scorpus.exact_dedup_stream(
-        spark.readStream.schema(b1.schema)
-        .option("maxFilesPerTrigger", "1").parquet(src),
-        f"{base}/index", f"{base}/out", f"{base}/ckpt",
-    ).start()
-    q.awaitTermination()
-    with open(stamp, "w") as fh:
-        fh.write(want)
-    return base
+    return materialize(
+        sf_dir, "documents.parquet", "garmadon_exstr_",
+        f"b1={_EXACT_B1};f={_EXACT_FRESH};c={_EXACT_COPIES};"
+        f"off={_EXACT_OFF};hp={dedup.HASH_HP_CHARS};v=1",
+        lambda base: _drain_increments(
+            base, *_exact_stream_batches(spark, sf_dir),
+            _scorpus.exact_dedup_stream),
+    )
 
 
 def doc_exact_stream(spark, sf_dir):
@@ -5616,44 +5431,19 @@ SELECT CAST((SELECT COUNT(*) FROM documents
 # every decision with an independent pure-Python implementation.
 
 
-def _simhash_stream_path(sf_dir: str) -> str:
-    return _index_cache_path(sf_dir, "documents.parquet",
-                             "garmadon_simstr_")
-
-
 def _ensure_simhash_streamed(spark, sf_dir):
     """Run simhash_dedup_stream once per corpus over the exact gate's
     engineered increments (same batch shapes, distinct cache)."""
-    import glob
-    import os
-    import shutil
-
     from garmadon_spark.streaming import corpus as _scorpus
 
-    base = _simhash_stream_path(sf_dir)
-    stamp = os.path.join(base, "_OK")
-    want = (f"b1={_EXACT_B1};f={_EXACT_FRESH};c={_EXACT_COPIES};"
-            f"off={_EXACT_OFF};l={dedup._simhash_layout(14, 4)};v=1")
-    if os.path.exists(stamp) and open(stamp).read() == want:
-        return base
-    shutil.rmtree(base, ignore_errors=True)
-    b1, b2 = _exact_stream_batches(spark, sf_dir)
-    src = f"{base}/src"
-    b1.coalesce(1).write.mode("append").parquet(src)
-    first = set(glob.glob(f"{src}/part-*.parquet"))
-    b2.coalesce(1).write.mode("append").parquet(src)
-    second = sorted(set(glob.glob(f"{src}/part-*.parquet")) - first)
-    for i, f in enumerate(sorted(first) + second):
-        os.utime(f, (1_000_000_000 + i, 1_000_000_000 + i))
-    q = _scorpus.simhash_dedup_stream(
-        spark.readStream.schema(b1.schema)
-        .option("maxFilesPerTrigger", "1").parquet(src),
-        f"{base}/index", f"{base}/out", f"{base}/ckpt",
-    ).start()
-    q.awaitTermination()
-    with open(stamp, "w") as fh:
-        fh.write(want)
-    return base
+    return materialize(
+        sf_dir, "documents.parquet", "garmadon_simstr_",
+        f"b1={_EXACT_B1};f={_EXACT_FRESH};c={_EXACT_COPIES};"
+        f"off={_EXACT_OFF};l={dedup._simhash_layout(14, 4)};v=1",
+        lambda base: _drain_increments(
+            base, *_exact_stream_batches(spark, sf_dir),
+            _scorpus.simhash_dedup_stream),
+    )
 
 
 def doc_simhash_stream(spark, sf_dir):
@@ -5873,8 +5663,7 @@ def doc_index_compaction(spark, sf_dir):
     import os
     import shutil
 
-    base = _index_cache_path(sf_dir, "documents.parquet",
-                             "garmadon_cmpq_")
+    base = fixture_path(sf_dir, "documents.parquet", "garmadon_cmpq_")
     shutil.rmtree(base, ignore_errors=True)
     docs = _docs(spark, sf_dir).select("doc_id", "text")
     hist = docs.filter(F.col("doc_id") < _CMP_HIST)

@@ -19,9 +19,20 @@ from __future__ import annotations
 import hashlib
 import os
 import re
+import shutil
 import stat
+import tempfile
 
 from pyspark.sql import SparkSession
+
+
+def _default_driver_memory() -> str:
+    """A third of the host's RAM, floored at 1g and capped at 16g: a
+    fixed 16g heap on a 15 GiB host let one test JVM plus one oracle
+    JVM exhaust the machine."""
+    ram_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 30
+    return f"{min(16, max(1, ram_gib // 3))}g"
+
 
 _DEFAULTS = {
     "spark.sql.session.timeZone": "UTC",
@@ -37,10 +48,11 @@ _DEFAULTS = {
     "spark.sql.files.maxPartitionBytes": "134217728",
     "spark.sql.autoBroadcastJoinThreshold": "67108864",
     "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
-    # local-mode JVM heap defaults to 1g — far under the harness's
-    # memory; wide aggs (64-column minhash) GC-thrash there.  Only
-    # applies at JVM launch (getOrCreate of the first session).
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
+    # local-mode JVM heap defaults to 1g — wide aggs (64-column
+    # minhash) GC-thrash there.  Only applies at JVM launch
+    # (getOrCreate of the first session).
+    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM",
+                                          _default_driver_memory()),
     "spark.sql.shuffle.partitions": "32",
     # Structured Streaming: bounded state cleanup by default.
     "spark.sql.streaming.stateStore.compression.codec": "lz4",
@@ -73,14 +85,11 @@ def get_spark(
     # on a cluster master remote listStatus round trips dominate and
     # the distributed listing is kept, just with sane task sizing
     # (64 tasks listing ~hundreds of dirs each beats 10,000
-    # single-dir tasks there too).  Both env-overridable.
+    # single-dir tasks there too).  ``extra_conf`` overrides both.
     if master.startswith("local"):
-        conf.setdefault(
-            "spark.sql.sources.parallelPartitionDiscovery.threshold",
-            os.environ.get("SPARK_GRAFT_LIST_THRESHOLD", "100000"))
-    conf.setdefault(
-        "spark.sql.sources.parallelPartitionDiscovery.parallelism",
-        os.environ.get("SPARK_GRAFT_LIST_PARALLELISM", "64"))
+        conf["spark.sql.sources.parallelPartitionDiscovery.threshold"] = \
+            "100000"
+    conf["spark.sql.sources.parallelPartitionDiscovery.parallelism"] = "64"
     if extra_conf:
         conf.update(extra_conf)
     for k, v in conf.items():
@@ -140,6 +149,46 @@ def probe(path: str):
                 h.update(f"{rel}/{f}:{fs.st_mtime_ns}:{fs.st_size};".encode())
                 nbytes += fs.st_size
     return h.hexdigest()[:16], nbytes, False
+
+
+def fixture_path(sf_dir: str, source_table: str, prefix: str) -> str:
+    """Content-addressed temp directory of one on-disk fixture, keyed
+    by the SOURCE table's path and probe token (sig index ↔ documents,
+    IVF ↔ embeddings), so a regenerated corpus lands in a new
+    directory."""
+    token = probe(os.path.join(sf_dir, source_table))[0]
+    key = f"{os.path.join(os.path.realpath(sf_dir), source_table)}:{token}"
+    h = hashlib.sha1(key.encode()).hexdigest()[:16]
+    return os.path.join(tempfile.gettempdir(), f"{prefix}{h}")
+
+
+def materialize(sf_dir: str, source_table: str, prefix: str, want: str,
+                build) -> str:
+    """The one on-disk fixture protocol (materialized indexes, drained
+    streams — offline-job output built once per corpus version).
+
+    Returns ``fixture_path(...)`` at once when its ``_OK`` stamp holds
+    exactly ``want`` (the build's parameters; the source's file state
+    is already in the path).  Otherwise empties the directory, runs
+    ``build(base)`` and writes ``want`` to ``_OK`` only after the build
+    returns, so a build that raises leaves no stamp and the next call
+    rebuilds.  The build writes in place, never into a directory
+    renamed afterwards: a file sink's ``_spark_metadata`` log records
+    absolute paths, so a moved output could not be read back."""
+    base = fixture_path(sf_dir, source_table, prefix)
+    stamp = os.path.join(base, "_OK")
+    try:
+        with open(stamp) as fh:
+            if fh.read() == want:
+                return base
+    except FileNotFoundError:
+        pass
+    shutil.rmtree(base, ignore_errors=True)
+    os.makedirs(base)
+    build(base)
+    with open(stamp, "w") as fh:
+        fh.write(want)
+    return base
 
 
 RESULT = "result"

@@ -1,23 +1,32 @@
-"""The session-scoped memo registry (``session.MEMO``) and its stat probe.
+"""The session layer's shared mechanisms: the memo registry
+(``session.MEMO``), its stat probe, the on-disk fixture protocol
+(``session.materialize``) and the default driver heap.
 
 Pins the registry's contract: entries are never served across Spark
 applications, a rewritten input (new probe token) invalidates every
 entry class, ``purge_result_memo`` drops exactly the RESULT class, and
-a slot releases its previous handle before the next build.
+a slot releases its previous handle before the next build.  Pins the
+fixture protocol's: an equal stamp serves without building, anything
+else rebuilds into an emptied directory, the stamp is written only
+after a build returns, and the path follows the source table.
 """
 
 from __future__ import annotations
 
+import glob
 import os
 import sys
 import threading
 from types import SimpleNamespace
 
 import pandas as pd
+import pytest
 
+from garmadon_spark import session
 from garmadon_spark.queries import datapipe
 from garmadon_spark.session import (
-    MEMO, RESULT, SESSION, MemoRegistry, probe, scan_parquet,
+    MEMO, RESULT, SESSION, MemoRegistry, fixture_path, materialize, probe,
+    scan_parquet,
 )
 
 
@@ -183,3 +192,132 @@ def test_registry_shared_by_threads_never_serves_a_wrong_token():
     finally:
         sys.setswitchinterval(old)
     assert errors == []
+
+
+def _corpus(tmp_path, monkeypatch):
+    """A corpus dir holding a documents table; fixtures land under
+    ``tmp_path/tmp``."""
+    monkeypatch.setattr(session.tempfile, "tempdir", str(tmp_path / "tmp"))
+    d = tmp_path / "sf"
+    d.mkdir()
+    _write_docs(d, 3)
+    return str(d)
+
+
+def _stamp(base):
+    with open(os.path.join(base, "_OK")) as fh:
+        return fh.read()
+
+
+def test_materialize_equal_want_does_not_build(tmp_path, monkeypatch):
+    d = _corpus(tmp_path, monkeypatch)
+    calls = []
+
+    def build(base):
+        calls.append(base)
+        open(os.path.join(base, "data"), "w").close()
+
+    base = materialize(d, "documents.parquet", "garmadon_t_", "k=1", build)
+    assert base == fixture_path(d, "documents.parquet", "garmadon_t_")
+    assert base.startswith(str(tmp_path / "tmp" / "garmadon_t_"))
+    assert calls == [base] and _stamp(base) == "k=1"
+    assert materialize(d, "documents.parquet", "garmadon_t_", "k=1",
+                       build) == base
+    assert calls == [base]
+
+
+def test_materialize_other_want_rebuilds_into_empty_dir(tmp_path,
+                                                        monkeypatch):
+    d = _corpus(tmp_path, monkeypatch)
+    seen = []
+
+    def build(base):
+        seen.append(sorted(os.listdir(base)))
+        open(os.path.join(base, "data"), "w").close()
+
+    base = materialize(d, "documents.parquet", "garmadon_t_", "k=1", build)
+    assert materialize(d, "documents.parquet", "garmadon_t_", "k=2",
+                       build) == base
+    assert seen == [[], []] and _stamp(base) == "k=2"
+
+
+def test_materialize_failed_build_leaves_no_stamp(tmp_path, monkeypatch):
+    d = _corpus(tmp_path, monkeypatch)
+    seen = []
+
+    def crash(base):
+        open(os.path.join(base, "partial"), "w").close()
+        raise RuntimeError("build crashed")
+
+    with pytest.raises(RuntimeError):
+        materialize(d, "documents.parquet", "garmadon_t_", "k=1", crash)
+    base = fixture_path(d, "documents.parquet", "garmadon_t_")
+    assert os.listdir(base) == ["partial"]
+    materialize(d, "documents.parquet", "garmadon_t_", "k=1",
+                lambda b: seen.append(os.listdir(b)))
+    assert seen == [[]] and _stamp(base) == "k=1"
+
+
+def test_fixture_path_follows_source_table_rewrite(tmp_path, monkeypatch):
+    d = _corpus(tmp_path, monkeypatch)
+    before = fixture_path(d, "documents.parquet", "garmadon_t_")
+    assert fixture_path(d, "documents.parquet", "garmadon_t_") == before
+    _write_docs(d, 5)
+    assert fixture_path(d, "documents.parquet", "garmadon_t_") != before
+
+
+def test_retrain_copy_does_not_inherit_source_stamp(tmp_path, monkeypatch):
+    # at fixture sizes the source index and its retrained copy carry the
+    # same stamp (both cell counts floor at 8): an inherited ``_OK``
+    # would make a crashed retrain look finished
+    d = _corpus(tmp_path, monkeypatch)
+    src = materialize(d, "documents.parquet", "garmadon_t_src_", "k=8",
+                      lambda b: os.makedirs(os.path.join(b, "vectors")))
+
+    def crashed_retrain(base):
+        datapipe._copy_unstamped(src, base)
+        raise RuntimeError("retrain crashed")
+
+    with pytest.raises(RuntimeError):
+        materialize(d, "documents.parquet", "garmadon_t_copy_", "k=8",
+                    crashed_retrain)
+    copy = fixture_path(d, "documents.parquet", "garmadon_t_copy_")
+    assert os.listdir(copy) == ["vectors"]
+    assert _stamp(src) == "k=8"
+    retrains = []
+    materialize(d, "documents.parquet", "garmadon_t_copy_", "k=8",
+                lambda b: retrains.append(b))
+    assert retrains == [copy]
+
+
+def test_drain_increments_two_ordered_micro_batches(spark, tmp_path):
+    # the first increment holds the larger ids, so the delivery order
+    # is the pinned mtimes, not the (random) part-file names
+    b1 = spark.createDataFrame([(10,), (11,), (12,)], "doc_id long")
+    b2 = spark.createDataFrame([(0,), (1,)], "doc_id long")
+    seen = []
+
+    def stream(source, index, out, ckpt):
+        return (source.writeStream
+                .foreachBatch(lambda df, bid: seen.append(
+                    (bid, sorted(r.doc_id for r in df.collect()))))
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True))
+
+    datapipe._drain_increments(str(tmp_path), b1, b2, stream)
+    assert seen == [(0, [10, 11, 12]), (1, [0, 1])]
+    # one file per increment, whole seconds apart: the order survives a
+    # filesystem with 1 s mtime resolution
+    files = sorted(glob.glob(str(tmp_path / "src" / "part-*.parquet")),
+                   key=os.path.getmtime)
+    assert len(files) == 2
+    assert pd.read_parquet(files[0])["doc_id"].tolist() == [10, 11, 12]
+    assert os.path.getmtime(files[1]) - os.path.getmtime(files[0]) >= 1
+
+
+def test_default_driver_memory_is_a_third_of_ram(monkeypatch):
+    for ram_gib, want in ((2, "1g"), (15, "5g"), (47, "15g"), (64, "16g"),
+                          (512, "16g")):
+        pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": ram_gib << 18}
+        monkeypatch.setattr(session.os, "sysconf", pages.__getitem__)
+        assert session._default_driver_memory() == want
